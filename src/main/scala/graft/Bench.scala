@@ -172,18 +172,13 @@ object Bench {
       } finally {
         cancel.cancel()
         spark.sparkContext.clearJobGroup()
-        spark.catalog.clearCache() // no cross-query cache interference
-        // drop eager localCheckpoint blocks (Tables.hot) — ~95 queries
-        // × iterations of accumulated blocks otherwise grind the JVM.
-        // EXCEPT pinned session-frozen artifacts (the trained IVF
-        // index, Tables.hotPinned): a deployment trains an index once
+        // drop per-query blocks and the SQL cache, keeping the pinned
+        // session-frozen artifacts: a deployment trains an index once
         // and serves every query from it — benching the re-train into
         // every ANN query would measure a shape no one runs. The
         // first consumer pays the training (visible in iteration-1
         // samples); min-of-N reports the steady serve-time.
-        spark.sparkContext.getPersistentRDDs
-          .filter { case (id, _) => !Tables.pinnedRddIds.contains(id) }
-          .values.foreach(_.unpersist(blocking = false))
+        Artifacts.releaseQueryState(spark)
       }
     }
 

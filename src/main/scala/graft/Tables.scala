@@ -85,28 +85,13 @@ object Tables {
     (h, h.count())
   }
 
-  /** RDD ids of SESSION-FROZEN artifacts (the IVF coarse index memo,
-    * VectorOps.ivfAssign) that the per-query cleanup in Verify/Bench
-    * must NOT unpersist: they are the deliberately-shared "trained
-    * index" state (the bm25Stats frozen-artifact pattern) — dropping
-    * them would force every consumer query to re-train an index a
-    * real deployment trains once and serves from. */
+  /** RDD ids of the live session-frozen artifacts' blocks, which
+    * `Artifacts.releaseQueryState` must NOT unpersist: dropping them
+    * would force every consumer query to re-train an index a real
+    * deployment trains once and serves from. Owned by `Artifacts`
+    * (`pin` adds, dead or stopped-session entries remove). */
   val pinnedRddIds: java.util.Set[Int] =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-
-  /** `hot` for a session-frozen artifact: eager checkpoint, pin the
-    * new blocks against the harness cleanup, and hand back the RDDs so
-    * the caller's memo can liveness-check them (anything may still
-    * unpersist explicitly — the memo then rebuilds instead of hitting
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). */
-  def hotPinned(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val h = df.localCheckpoint(true)
-    val rdds = (sc.getPersistentRDDs -- before).values.toSeq
-    rdds.foreach(r => pinnedRddIds.add(r.id))
-    (h, rdds)
-  }
 
   /** Lazy local checkpoint for loops whose convergence check is itself
     * a full-scan aggregate over the new state: the check's job

@@ -71,14 +71,9 @@ object Verify {
         } finally {
           cancel.cancel()
           spark.sparkContext.clearJobGroup()
-          // drop eager localCheckpoint blocks + SQL cache so 95
-          // sequential queries don't accumulate storage — EXCEPT the
-          // pinned session-frozen artifacts (the trained IVF index):
-          // those are shared across queries by design (Tables.hotPinned)
-          spark.sparkContext.getPersistentRDDs
-            .filter { case (id, _) => !Tables.pinnedRddIds.contains(id) }
-            .values.foreach(_.unpersist(blocking = false))
-          spark.catalog.clearCache()
+          // sequential queries must not accumulate storage; the
+          // session-frozen artifacts are shared across queries by design
+          Artifacts.releaseQueryState(spark)
         }
       }
     spark.stop()

@@ -195,9 +195,10 @@ case class WktMultiText(child: Expression) extends UnaryExpression {
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
       case ArrayType(StructType(Array(a, b)), _)
-        if a.dataType == ArrayType(ArrayType(DoubleType, false), false) ||
-           a.dataType == ArrayType(ArrayType(DoubleType, true), true) ||
-           a.dataType.isInstanceOf[ArrayType] =>
+        if Seq(a, b).forall(_.dataType match {
+          case ArrayType(ArrayType(DoubleType, _), _) => true
+          case _ => false
+        }) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(

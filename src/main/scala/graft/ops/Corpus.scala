@@ -612,12 +612,10 @@ object Corpus {
     * and tiny (eval sets are KB-MB by nature); its window index is
     * built once and every corpus snapshot screens against it, so the
     * per-run cost is the corpus scan alone. */
-  private val benchWinMemo =
-    new graft.FrozenMemo[(SparkSession, String, Int), DataFrame]()
   private def benchWindows(s: SparkSession, dir: String,
                            w: Int): DataFrame =
-    benchWinMemo.getOrBuild((s, dir, w), s) {
-      Tables.hotPinned(
+    graft.Artifacts.frozen(s, ("corpus.benchWindows", dir, w)) {
+      graft.Artifacts.pin(
         substringWindows(docs(s, dir).filter(col("doc_id") % 31 === 0), w)
           .select("h1", "h2").distinct())
     }

@@ -817,9 +817,6 @@ object GeoQueries {
       .orderBy("id")
   }
 
-  private val multiPolyWktMemo =
-    new graft.FrozenMemo[(SparkSession, String), DataFrame]()
-
   /** SESSION-FROZEN INPUT PREP (the docToks pattern): the synthetic
     * two-part MULTIPOLYGON text corpus — consecutive triangles paired
     * and rendered to `MULTIPOLYGON (((…)), ((…)))` strings once per
@@ -829,7 +826,7 @@ object GeoQueries {
     * PARSE + centroid math that geo_wkt_multipoly certifies stays
     * headline work paid per run. */
   def multiPolyWktText(s: SparkSession, dir: String): DataFrame =
-    multiPolyWktMemo.getOrBuild((s, dir), s) {
+    graft.Artifacts.frozen(s, ("geo.multiPolyWktText", dir)) {
       val t = graft.Tables.fanout(Derive.triangles(s, dir))
       val a = t.filter(col("poly_id") % 2 === 0)
         .select(col("poly_id").as("m_id"),
@@ -840,7 +837,7 @@ object GeoQueries {
       val parts = array(
         struct(array(col("axs")).as("rxs"), array(col("ays")).as("rys")),
         struct(array(col("bxs")).as("rxs"), array(col("bys")).as("rys")))
-      graft.Tables.hotPinned(a.join(b, Seq("m_id"))
+      graft.Artifacts.pin(a.join(b, Seq("m_id"))
         .select(col("m_id"),
           graft.geo.Wkt.toWktMultiPolygon(parts).as("wkt")))
     }

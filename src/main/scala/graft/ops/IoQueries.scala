@@ -16,41 +16,23 @@ import org.apache.spark.sql.functions._
   */
 object IoQueries {
 
-  /** Scratch root for the sink demos. Local /tmp by default — fine in
-    * local mode where driver and executors share a filesystem; on a
-    * REAL cluster set SPARK_GRAFT_IO_DIR to a shared-FS root
-    * (hdfs://…, s3a://…) so executors can read what was written.
-    * Every dir is registered for recursive deletion at JVM exit, so
-    * min-of-N Verify/Bench iterations don't accumulate under /tmp. */
-  private val cleanupDirs =
-    java.util.Collections.synchronizedList(
-      new java.util.ArrayList[java.nio.file.Path]())
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      cleanupDirs.forEach { root =>
-        try {
-          java.nio.file.Files.walk(root)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        } catch { case _: Throwable => () }
-      }
-    }))
-  }
   private val lastBucketTables =
     new java.util.concurrent.atomic.AtomicReference[Seq[String]](Seq.empty)
 
-  private def scratchDir(prefix: String): String =
+  /** Scratch dir for the sink demos. Local by default (the session's
+    * artifact root, deleted when the SparkContext stops) — fine in
+    * local mode where driver and executors share a filesystem; on a
+    * REAL cluster set SPARK_GRAFT_IO_DIR to a shared-FS root
+    * (hdfs://…, s3a://…) so executors can read what was written. */
+  private def scratchDir(s: SparkSession, prefix: String): String =
     sys.env.get("SPARK_GRAFT_IO_DIR") match {
       case Some(root) => // shared FS — leave cleanup to the lake's policy
         s"$root/$prefix-${java.util.UUID.randomUUID().toString.take(8)}"
-      case None =>
-        val p = java.nio.file.Files.createTempDirectory(prefix)
-        cleanupDirs.add(p)
-        p.toString
+      case None => graft.Artifacts.scratchDir(s, prefix)
     }
 
   def ioRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val tmp = scratchDir("graft-io")
+    val tmp = scratchDir(s, "graft-io")
     val docs = Tables.load(s, dir, "documents")
     // writeCsv disables the writer's silent edge-whitespace trimming —
     // the h_sum checksum below would pass on trimmed data only because
@@ -95,7 +77,7 @@ object IoQueries {
     * oracle computes the same aggregate from the plain tables, so
     * correctness of the bucketed path is hash-certified. */
   def qBucketJoin(s: SparkSession, dir: String): DataFrame = {
-    val tmp = scratchDir("graft-buckets")
+    val tmp = scratchDir(s, "graft-buckets")
     // unique table names per invocation — fixed names were racy across
     // concurrent sessions and collided across min-of-N iterations;
     // the PREVIOUS invocation's pair is dropped so a long session's
@@ -171,7 +153,7 @@ object IoQueries {
     * plain filtered join; IoSpec asserts the dynamicpruning
     * subquery actually reached the scan. */
   def qDppJoin(s: SparkSession, dir: String): DataFrame = {
-    val tmp = scratchDir("graft-dpp")
+    val tmp = scratchDir(s, "graft-dpp")
     graft.io.Sources.writePartitioned(
       Tables.loadEventsUs(s, dir).select("event_type", "user_id", "value"),
       tmp, Seq("event_type"))
@@ -204,7 +186,7 @@ object IoQueries {
     * roundtrip (q_dpp_join covers the RUNTIME-pruning sibling).
     */
   def qPartitionSink(s: SparkSession, dir: String): DataFrame = {
-    val tmp = scratchDir("graft-part")
+    val tmp = scratchDir(s, "graft-part")
     Tables.loadEventsUs(s, dir)
       .withColumn("day", expr("ts_us DIV 86400000000"))
       .select(col("event_id"), col("user_id"), col("event_type"),

@@ -50,11 +50,8 @@ object Retrieval {
     * from the corpus; the streaming scorer broadcasts it as the static
     * side (the production pattern: stats frozen from yesterday's
     * corpus, today's crawl scored against them). */
-  private val bm25Memo =
-    new graft.FrozenMemo[(SparkSession, String), DataFrame]()
-
   private[graft] def bm25Stats(s: SparkSession, dir: String): DataFrame =
-    bm25Memo.getOrBuild((s, dir), s) {
+    graft.Artifacts.frozen(s, ("retrieval.bm25Stats", dir)) {
       val d = docs(s, dir).select(col("doc_id"), size(toks).as("dl"))
       val hits = docs(s, dir)
         .select(col("doc_id"), size(toks).as("dl"), explode(toks).as("w"))
@@ -62,7 +59,7 @@ object Retrieval {
         .groupBy("doc_id", "dl", "w").agg(count(lit(1)).as("tf"))
       val stats = broadcast(d.agg(count(lit(1)).as("n"),
         sum(col("dl")).as("sl")))
-      Tables.hotPinned(
+      graft.Artifacts.pin(
         hits.groupBy("w").agg(count(lit(1)).as("df")).crossJoin(stats)
           .select(col("w"),
             round(log((col("n") - col("df") + lit(0.5)) /

@@ -11,9 +11,6 @@ object Text {
   /** Whitespace tokens of the `text` column. */
   val toks: Column = split(col("text"), " ")
 
-  private val tokMemo =
-    new graft.FrozenMemo[(SparkSession, String), DataFrame]()
-
   /** SESSION-FROZEN ARTIFACT (the ivfAssign / bm25Stats pattern): the
     * TOKENIZED corpus base table — documents plus their whitespace
     * token array and token count, fanned out, checkpointed and pinned
@@ -29,8 +26,8 @@ object Text {
     *
     * Columns: doc_id, text, lang, source, n_chars, toks, n_tok. */
   def docToks(s: SparkSession, dir: String): DataFrame =
-    tokMemo.getOrBuild((s, dir), s) {
-      graft.Tables.hotPinned(
+    graft.Artifacts.frozen(s, ("text.docToks", dir)) {
+      graft.Artifacts.pin(
         graft.Tables.fanout(graft.Tables.load(s, dir, "documents"))
           .withColumn("toks", toks)
           .withColumn("n_tok", size(col("toks"))))

@@ -276,17 +276,13 @@ object TextDedup {
     * (session, corpus dir); only the increment side's signatures are
     * computed per run. */
   private case class IncIndex(harr: DataFrame, buckets: DataFrame)
-  private val incIndexMemo =
-    new graft.FrozenMemo[(SparkSession, String), IncIndex]()
 
   private def incIndex(s: SparkSession, dir: String): IncIndex =
-    incIndexMemo.getOrBuild((s, dir), s) {
-      val (harr, r1) = Tables.hotPinned(
+    graft.Artifacts.frozen(s, ("textDedup.incIndex", dir)) {
+      val harr = graft.Artifacts.pin(
         docs(s, dir).filter(col("doc_id") % 4 =!= 0)
           .select(col("doc_id"), harrOf.as("harr")))
-      val (buckets, r2) = Tables.hotPinned(
-        packedBandKeys(harr, Seq("doc_id")))
-      (IncIndex(harr, buckets), r1 ++ r2)
+      IncIndex(harr, graft.Artifacts.pin(packedBandKeys(harr, Seq("doc_id"))))
     }
 
   def dedupIncremental(s: SparkSession, dir: String): DataFrame = {

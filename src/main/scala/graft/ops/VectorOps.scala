@@ -158,34 +158,27 @@ object VectorOps {
     * trains its IVF index nightly and serves every query against it.
     * Before the memo each composite audit re-trained the identical
     * structure per method. */
-  private val ivfMemo =
-    new graft.FrozenMemo[(SparkSession, String), (DataFrame, DataFrame)]()
-
   private def ivfAssign(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    // liveness + single-builder semantics live in FrozenMemo: if
-    // anything unpersisted the pinned blocks (tests, an explicit
-    // reset), rebuild instead of serving a dangling checkpoint
-    ivfMemo.getOrBuild((s, dir), s) {
+    graft.Artifacts.frozen(s, ("vector.ivfAssign", dir)) {
       val e = emb(s, dir)
       val seed = e.filter(col("vec_id") < NCells)
         .select(col("vec_id").as("cent_id"), col("v").as("cv"))
       // materialize the (tiny) refined centroid table once — it feeds
       // two broadcasts (corpus assignment + query probes), which would
       // otherwise each recompute the whole Lloyd subtree
-      val (centsH, r1) = Tables.hotPinned(kmeansIterate(e, seed, KmeansIters))
-      val cents = broadcast(centsH)
+      val cents = broadcast(graft.Artifacts.pin(kmeansIterate(e, seed, KmeansIters)))
       // argmin as a hash aggregate (min over a (cd, cent_id) struct —
       // lexicographic, so ties break on cent_id exactly like the
       // oracle's ROW_NUMBER ORDER BY cd, cent_id): partial-aggregates
       // map-side instead of sort-shuffling all n×NCells rows
-      val (assigned, r2) = Tables.hotPinned(e.join(cents)
+      val assigned = graft.Artifacts.pin(e.join(cents)
         .select(col("vec_id"), col("v"), col("cent_id"),
           l2(col("v"), col("cv")).as("cd"))
         .groupBy("vec_id")
         .agg(min(struct(col("cd"), col("cent_id"))).as("m"),
           first(col("v")).as("v"))
         .select(col("vec_id"), col("v"), col("m.cent_id").as("cent_id")))
-      ((assigned, cents), r1 ++ r2)
+      (assigned, cents)
     }
 
   def annIvf(s: SparkSession, dir: String): DataFrame = {
@@ -681,16 +674,12 @@ object VectorOps {
     * PQ codebook and long-form corpus codes, trained once per
     * (session, corpus dir) and served to embed_pq, ann_pq and the
     * recall/ndcg audits — the PQ index of a production vector store. */
-  private val pqFrozenMemo =
-    new graft.FrozenMemo[(SparkSession, String), (DataFrame, DataFrame)]()
-
   private def pqFrozen(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
-    pqFrozenMemo.getOrBuild((s, dir), s) {
+    graft.Artifacts.frozen(s, ("vector.pqFrozen", dir)) {
       val e = emb(s, dir)
-      val (centsH, r1) = Tables.hotPinned(pqCodebook(e))
-      val (codesH, r2) = Tables.hotPinned(pqAssign(e, broadcast(centsH)))
-      ((centsH, codesH), r1 ++ r2)
+      val centsH = graft.Artifacts.pin(pqCodebook(e))
+      (centsH, graft.Artifacts.pin(pqAssign(e, broadcast(centsH))))
     }
 
   def embedPq(s: SparkSession, dir: String): DataFrame =
@@ -844,21 +833,17 @@ object VectorOps {
     * residuals and the (vec_id, sub, code, cell) corpus codes. Derives
     * from the frozen ivfAssign coarse structure; together they are the
     * complete FAISS-shaped index a production deployment builds once. */
-  private val ivfPqMemo =
-    new graft.FrozenMemo[(SparkSession, String), (DataFrame, DataFrame)]()
-
   private def ivfPqFrozen(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
-    ivfPqMemo.getOrBuild((s, dir), s) {
+    graft.Artifacts.frozen(s, ("vector.ivfPqFrozen", dir)) {
       val (assigned, cents) = ivfAssign(s, dir)
       val resid = Tables.hot(assigned.join(cents, Seq("cent_id"))
         .select(col("vec_id"), col("cent_id").as("cell"),
           zip_with(col("v"), col("cv"), (a, b) => a - b).as("v")))
-      val (cbH, r1) = Tables.hotPinned(pqCodebook(resid.select("vec_id", "v")))
-      val (codesH, r2) = Tables.hotPinned(
+      val cbH = graft.Artifacts.pin(pqCodebook(resid.select("vec_id", "v")))
+      (cbH, graft.Artifacts.pin(
         pqAssign(resid.select("vec_id", "v"), broadcast(cbH))
-          .join(resid.select("vec_id", "cell"), Seq("vec_id")))
-      ((cbH, codesH), r1 ++ r2)
+          .join(resid.select("vec_id", "cell"), Seq("vec_id"))))
     }
 
   /** IVF-PQ search over the frozen coarse + residual index. */
@@ -1132,23 +1117,14 @@ object VectorOps {
     * re-running the 4-round corpus scan each — exactly like a
     * production pipeline that fits its isotropy correction once and
     * applies it everywhere. */
-  private case class PcaArtifact(e: DataFrame, dTab: DataFrame,
-                                 vArr: DataFrame,
-                                 live: Seq[org.apache.spark.rdd.RDD[_]])
-  private val pcaMemo =
-    new graft.FrozenMemo[(SparkSession, String),
-                         (DataFrame, DataFrame, DataFrame)]()
-
   private def pcaConverged(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    pcaMemo.getOrBuild((s, dir), s) {
-      val a = pcaTrain(s, dir)
-      ((a.e, a.dTab, a.vArr), a.live)
-    }
+    graft.Artifacts.frozen(s, ("vector.pcaConverged", dir))(pcaTrain(s, dir))
 
-  private def pcaTrain(s: SparkSession, dir: String): PcaArtifact = {
+  private def pcaTrain(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame) = {
     graft.GraftFunctions.register(s)
-    val (e, rE) = Tables.hotPinned(emb(s, dir))
+    val e = graft.Artifacts.pin(emb(s, dir))
     val n = broadcast(e.agg(count(lit(1)).as("n")))
     val dec = org.apache.spark.sql.types.DecimalType(38, 12)
     // per-dimension 6-dp mean, assembled into ONE array row. Cross-row
@@ -1167,7 +1143,7 @@ object VectorOps {
     // center ONCE: d = v − μ is round-invariant, and CollapseProject
     // would otherwise duplicate the zip_with subtree into every
     // consumer expression each round (the CLAUDE.md aliasing tax)
-    val (dTab, rD) = Tables.hotPinned(e.crossJoin(muArr)
+    val dTab = graft.Artifacts.pin(e.crossJoin(muArr)
       .select(col("vec_id"),
         zip_with(col("v"), col("mu"), (a, b) => a - b).as("d")))
     for (_ <- 1 to PcaIters) {
@@ -1190,8 +1166,7 @@ object VectorOps {
     // re-pin the converged 1-row state: the per-round hots above are
     // training scratch the per-query cleanup may drop; the artifact
     // the consumers serve from must survive it
-    val (vPinned, rV) = Tables.hotPinned(vArr)
-    PcaArtifact(e, dTab, broadcast(vPinned), rE ++ rD ++ rV)
+    (e, dTab, broadcast(graft.Artifacts.pin(vArr)))
   }
 
   def embedPca(s: SparkSession, dir: String): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry, Tables}
+import graft.{Artifacts, GraftSession, SparkEntry}
 
 /** Diagnostic sequential bench: runs the given queries IN ARGUMENT
   * ORDER, once each (repeat a name to re-run it), printing per-query
@@ -32,10 +32,7 @@ object BenchSeq {
         .write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
       val dc = (osBean.getProcessCpuTime - c0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !Tables.pinnedRddIds.contains(id) }
-        .values.foreach(_.unpersist(blocking = false))
+      Artifacts.releaseQueryState(spark)
       (dt, dc)
     }
 

@@ -11,21 +11,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // 64-column self-join plans (minhash/simhash signatures) send the
-      // optimizer's constraint propagation into a combinatorial blowup
-      // re-run at every AQE re-optimization — 30x wall-clock on dedup
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      // graft native expressions available everywhere in specs
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The production session config, at the specs' fixed 4 cores. */
+  lazy val session: SparkSession = GraftSession.local(4)
 }

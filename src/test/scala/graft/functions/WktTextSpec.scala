@@ -98,6 +98,22 @@ class WktTextSpec extends SparkSpec {
       chainMulti(col("parts"))))
   }
 
+  test("wkt_multi_text rejects non-double ring arrays at analysis") {
+    graft.GraftFunctions.register(spark)
+    val xs = array(array(lit(1.0), lit(2.0)))
+    val ints = array(array(lit(1), lit(2)))
+    // both fields wrong, then only the second (the one never checked
+    // before): analysis must fail by name, not a ClassCastException
+    // inside the kernel at run time
+    for ((rxs, rys) <- Seq((ints, ints), (xs, ints))) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.range(1).select(call_function("wkt_multi_text",
+          array(struct(rxs.as("rxs"), rys.as("rys"))))).collect()
+      }
+      assert(e.getMessage.contains("wkt_multi_text expects"), e.getMessage)
+    }
+  }
+
   test("kernels match the cast chains on the Derive geometries") {
     graft.GraftFunctions.register(spark)
     import graft.geo.Derive
