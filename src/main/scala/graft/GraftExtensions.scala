@@ -1,155 +1,54 @@
 package graft
 
-import graft.functions.ClippedSegmentLength
+import graft.functions._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+
+import scala.reflect.ClassTag
 
 /** SQL-surface registration of graft's native expressions.
   *
-  * Two entry points:
-  *  - config: `spark.sql.extensions=graft.GraftExtensions` (cluster-wide,
-  *    the SparkSessionExtensions route)
-  *  - programmatic: `GraftFunctions.register(spark)` on a live session.
-  *
-  * After either, `SELECT clipped_segment_length(cx,cy,r,x1,y1,x2,y2)`
-  * works from plain SQL.
+  * `GraftSession` installs this extension (`spark.sql.extensions=
+  * graft.GraftExtensions`), so every session it builds resolves the
+  * kernels from plain SQL, e.g. `SELECT clipped_segment_length(cx, cy,
+  * r, x1, y1, x2, y2)`. A session built elsewhere calls
+  * `GraftFunctions.register(spark)` once instead.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
     GraftFunctions.all.foreach(ext.injectFunction)
 }
 
+/** The one kernel table: SQL name → expression class. */
 object GraftFunctions {
   type Fn = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  val clippedSegmentLengthFn: Fn = (
-    FunctionIdentifier("clipped_segment_length"),
-    new ExpressionInfo(classOf[ClippedSegmentLength].getName,
-      "clipped_segment_length"),
-    (args: Seq[Expression]) => ClippedSegmentLength(args))
+  /** Spark's own builder: `ExpressionInfo` from the class, and a
+    * constructor match by arity that raises WRONG_NUM_ARGS at analysis
+    * (a `Seq[Expression]` constructor takes any arity and checks it in
+    * its `require`). */
+  private def fn[T <: Expression: ClassTag](name: String): Fn = {
+    val (info, builder) = FunctionRegistryBase.build[T](name, None)
+    (FunctionIdentifier(name), info, builder)
+  }
 
-  val hilbertIndexFn: Fn = (
-    FunctionIdentifier("hilbert_index"),
-    new ExpressionInfo(classOf[functions.HilbertIndex].getName, "hilbert_index"),
-    (args: Seq[Expression]) => functions.HilbertIndex(args))
-
-  val pointInPolygonFn: Fn = (
-    FunctionIdentifier("point_in_polygon"),
-    new ExpressionInfo(classOf[functions.PointInPolygon].getName,
-      "point_in_polygon"),
-    (args: Seq[Expression]) => functions.PointInPolygon(args))
-
-  val normalizeTextFn: Fn = (
-    FunctionIdentifier("normalize_text"),
-    new ExpressionInfo(classOf[functions.NormalizeText].getName,
-      "normalize_text"),
-    (args: Seq[Expression]) => functions.NormalizeText(args))
-
-  val clippedPolygonAreaFn: Fn = (
-    FunctionIdentifier("clipped_polygon_area"),
-    new ExpressionInfo(classOf[functions.ClippedPolygonArea].getName,
-      "clipped_polygon_area"),
-    (args: Seq[Expression]) => functions.ClippedPolygonArea(args))
-
-  val vecDotFn: Fn = (
-    FunctionIdentifier("vec_dot"),
-    new ExpressionInfo(classOf[functions.VecDot].getName, "vec_dot"),
-    (args: Seq[Expression]) => functions.VecDot(args))
-
-  val vecL2Fn: Fn = (
-    FunctionIdentifier("vec_l2"),
-    new ExpressionInfo(classOf[functions.VecL2].getName, "vec_l2"),
-    (args: Seq[Expression]) => functions.VecL2(args))
-
-  val minHashSignatureFn: Fn = (
-    FunctionIdentifier("minhash_signature"),
-    new ExpressionInfo(classOf[functions.MinHashSignature].getName,
-      "minhash_signature"),
-    (args: Seq[Expression]) => functions.MinHashSignature(args))
-
-  val bigramRunStatsFn: Fn = (
-    FunctionIdentifier("bigram_run_stats"),
-    new ExpressionInfo(classOf[functions.BigramRunStats].getName,
-      "bigram_run_stats"),
-    (args: Seq[Expression]) => functions.BigramRunStats(args.head))
-
-  val wktPartsFn: Fn = (
-    FunctionIdentifier("wkt_parts"),
-    new ExpressionInfo(classOf[functions.WktParts].getName, "wkt_parts"),
-    (args: Seq[Expression]) => functions.WktParts(args.head))
-
-  val dsum128Fn: Fn = (
-    FunctionIdentifier("dsum128"),
-    new ExpressionInfo(classOf[functions.Sum128].getName, "dsum128"),
-    (args: Seq[Expression]) => functions.Sum128(args(0), args(1)))
-
-  val qsum128Fn: Fn = (
-    FunctionIdentifier("qsum128"),
-    new ExpressionInfo(classOf[functions.QSum128].getName, "qsum128"),
-    (args: Seq[Expression]) => functions.QSum128(args(0), args(1)))
-
-  val rollingHashWindowsFn: Fn = (
-    FunctionIdentifier("rolling_hash_windows"),
-    new ExpressionInfo(classOf[functions.RollingHashWindows].getName,
-      "rolling_hash_windows"),
-    (args: Seq[Expression]) => functions.RollingHashWindows(args))
-
-  val md5MinHashFn: Fn = (
-    FunctionIdentifier("md5_minhash"),
-    new ExpressionInfo(classOf[functions.Md5MinHash].getName,
-      "md5_minhash"),
-    (args: Seq[Expression]) => functions.Md5MinHash(args))
-
-  val ffdBinsFn: Fn = (
-    FunctionIdentifier("ffd_bins"),
-    new ExpressionInfo(classOf[functions.FfdBins].getName, "ffd_bins"),
-    (args: Seq[Expression]) => functions.FfdBins(args))
-
-  val cdcChunksFn: Fn = (
-    FunctionIdentifier("cdc_chunks"),
-    new ExpressionInfo(classOf[functions.CdcChunks].getName, "cdc_chunks"),
-    (args: Seq[Expression]) => functions.CdcChunks(args.head))
-
-  val shingleHashesFn: Fn = (
-    FunctionIdentifier("shingle_hashes"),
-    new ExpressionInfo(classOf[functions.ShingleHashes].getName,
-      "shingle_hashes"),
-    (args: Seq[Expression]) => functions.ShingleHashes(args(0), args(1)))
-
-  val md5ShinglesFn: Fn = (
-    FunctionIdentifier("md5_shingles"),
-    new ExpressionInfo(classOf[functions.Md5Shingles].getName,
-      "md5_shingles"),
-    (args: Seq[Expression]) => functions.Md5Shingles(args(0), args(1)))
-
-  val charNgramsFn: Fn = (
-    FunctionIdentifier("char_ngrams"),
-    new ExpressionInfo(classOf[functions.CharNgrams].getName,
-      "char_ngrams"),
-    (args: Seq[Expression]) => functions.CharNgrams(args(0), args(1)))
-
-  val wordNgramsFn: Fn = (
-    FunctionIdentifier("word_ngrams"),
-    new ExpressionInfo(classOf[functions.WordNgrams].getName,
-      "word_ngrams"),
-    (args: Seq[Expression]) => functions.WordNgrams(args(0), args(1)))
-
-  val pairCodesFn: Fn = (
+  // `cap` is an Int constructor argument taken from a literal, which
+  // the reflective builder cannot supply
+  private val pairCodes: Fn = (
     FunctionIdentifier("pair_codes"),
-    new ExpressionInfo(classOf[functions.PairCodes].getName,
-      "pair_codes"),
+    FunctionRegistryBase.expressionInfo[PairCodes]("pair_codes", None),
     (args: Seq[Expression]) => args match {
-      case Seq(c) => functions.PairCodes(c)
+      case Seq(c) => PairCodes(c)
       // accept int AND long literal caps (SQL integer literals can
       // arrive as BIGINT; a 2+1-style foldable cap arrives unfolded —
       // fold it here rather than rejecting intent that is a valid cap)
       case Seq(c, cap) if cap.foldable =>
         cap.eval() match {
-          case n: Int => functions.PairCodes(c, n)
-          case n: Long if n >= 0 && n <= Int.MaxValue =>
-            functions.PairCodes(c, n.toInt)
+          case n: Int => PairCodes(c, n)
+          case n: Long if n >= 0 && n <= Int.MaxValue => PairCodes(c, n.toInt)
           case other => throw new IllegalArgumentException(
             "pair_codes cap must be a non-negative int-range literal; " +
               s"got $other")
@@ -159,68 +58,40 @@ object GraftFunctions {
           args.mkString(", "))
     })
 
-  val sortedCommonFn: Fn = (
-    FunctionIdentifier("sorted_common"),
-    new ExpressionInfo(classOf[functions.SortedCommon].getName,
-      "sorted_common"),
-    (args: Seq[Expression]) => functions.SortedCommon(args(0), args(1)))
+  val all: Seq[Fn] = Seq(
+    fn[ClippedSegmentLength]("clipped_segment_length"),
+    fn[ClippedPolygonArea]("clipped_polygon_area"),
+    fn[HilbertIndex]("hilbert_index"),
+    fn[PointInPolygon]("point_in_polygon"),
+    fn[NormalizeText]("normalize_text"),
+    fn[VecDot]("vec_dot"),
+    fn[VecL2]("vec_l2"),
+    fn[MinHashSignature]("minhash_signature"),
+    fn[BigramRunStats]("bigram_run_stats"),
+    fn[WktParts]("wkt_parts"),
+    fn[Sum128]("dsum128"),
+    fn[QSum128]("qsum128"),
+    fn[RollingHashWindows]("rolling_hash_windows"),
+    fn[FfdBins]("ffd_bins"),
+    fn[Md5MinHash]("md5_minhash"),
+    fn[CdcChunks]("cdc_chunks"),
+    fn[ShingleHashes]("shingle_hashes"),
+    fn[Md5Shingles]("md5_shingles"),
+    fn[CharNgrams]("char_ngrams"),
+    fn[WordNgrams]("word_ngrams"),
+    pairCodes,
+    fn[SortedCommon]("sorted_common"),
+    fn[SortedIntersect]("sorted_intersect"),
+    fn[WinnowFp]("winnow_fp"),
+    fn[MinMd5]("min_md5"),
+    fn[WktPointText]("wkt_point_text"),
+    fn[WktLineText]("wkt_line_text"),
+    fn[WktPolyText]("wkt_poly_text"),
+    fn[WktRingsText]("wkt_rings_text"),
+    fn[WktMultiText]("wkt_multi_text"))
 
-  val sortedIntersectFn: Fn = (
-    FunctionIdentifier("sorted_intersect"),
-    new ExpressionInfo(classOf[functions.SortedIntersect].getName,
-      "sorted_intersect"),
-    (args: Seq[Expression]) => functions.SortedIntersect(args(0), args(1)))
-
-  val minMd5Fn: Fn = (
-    FunctionIdentifier("min_md5"),
-    new ExpressionInfo(classOf[functions.MinMd5].getName, "min_md5"),
-    (args: Seq[Expression]) => functions.MinMd5(args(0), args(1)))
-
-  val wktPointTextFn: Fn = (
-    FunctionIdentifier("wkt_point_text"),
-    new ExpressionInfo(classOf[functions.WktPointText].getName,
-      "wkt_point_text"),
-    (args: Seq[Expression]) => functions.WktPointText(args(0), args(1)))
-
-  val wktLineTextFn: Fn = (
-    FunctionIdentifier("wkt_line_text"),
-    new ExpressionInfo(classOf[functions.WktLineText].getName,
-      "wkt_line_text"),
-    (args: Seq[Expression]) => functions.WktLineText(args(0), args(1)))
-
-  val wktPolyTextFn: Fn = (
-    FunctionIdentifier("wkt_poly_text"),
-    new ExpressionInfo(classOf[functions.WktPolyText].getName,
-      "wkt_poly_text"),
-    (args: Seq[Expression]) => functions.WktPolyText(args(0), args(1)))
-
-  val wktRingsTextFn: Fn = (
-    FunctionIdentifier("wkt_rings_text"),
-    new ExpressionInfo(classOf[functions.WktRingsText].getName,
-      "wkt_rings_text"),
-    (args: Seq[Expression]) => functions.WktRingsText(args(0), args(1)))
-
-  val wktMultiTextFn: Fn = (
-    FunctionIdentifier("wkt_multi_text"),
-    new ExpressionInfo(classOf[functions.WktMultiText].getName,
-      "wkt_multi_text"),
-    (args: Seq[Expression]) => functions.WktMultiText(args(0)))
-
-  val winnowFpFn: Fn = (
-    FunctionIdentifier("winnow_fp"),
-    new ExpressionInfo(classOf[functions.WinnowFp].getName, "winnow_fp"),
-    (args: Seq[Expression]) => functions.WinnowFp(args))
-
-  val all: Seq[Fn] =
-    Seq(clippedSegmentLengthFn, hilbertIndexFn, pointInPolygonFn,
-      normalizeTextFn, clippedPolygonAreaFn, vecDotFn, vecL2Fn,
-      minHashSignatureFn, bigramRunStatsFn, wktPartsFn, dsum128Fn,
-      qsum128Fn, rollingHashWindowsFn, ffdBinsFn, md5MinHashFn,
-      cdcChunksFn, shingleHashesFn, md5ShinglesFn, charNgramsFn,
-      wordNgramsFn, pairCodesFn, sortedCommonFn, sortedIntersectFn,
-      winnowFpFn, minMd5Fn, wktPointTextFn, wktLineTextFn, wktPolyTextFn,
-      wktRingsTextFn, wktMultiTextFn)
-
+  /** For a session `GraftSession` did not build; its sessions already
+    * carry every kernel through `GraftExtensions`. */
   def register(spark: SparkSession): Unit =
     all.foreach { case (id, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, info, builder)

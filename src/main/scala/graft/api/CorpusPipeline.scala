@@ -114,10 +114,6 @@ final case class CorpusPipeline(df: DataFrame) {
     * whose every token is removed keeps an empty-text row (drop it
     * with qualityFilter downstream if that's the policy). */
   def dedupSubstrings(w: Int = 50): CorpusPipeline = {
-    // substringWindows resolves the native rolling_hash_windows by
-    // name — register here so the step works on a bare session (every
-    // other pipeline step uses only built-ins and never registers).
-    graft.GraftFunctions.register(df.sparkSession)
     val wins = graft.Tables.hot(graft.ops.Corpus.substringWindows(df, w))
     val packed = expr("""CASE WHEN doc_id >= 0 AND doc_id < 4398046511104
         AND pos >= 0 AND pos < 1048576
@@ -165,7 +161,6 @@ final case class CorpusPipeline(df: DataFrame) {
     * corpus window stream pays a map-side semi-join and never
     * shuffles. */
   def decontamSpan(bench: DataFrame, w: Int = 25): CorpusPipeline = {
-    graft.GraftFunctions.register(df.sparkSession)
     val bw = graft.ops.Corpus.substringWindows(bench, w)
       .select("h1", "h2").distinct()
     val hits = graft.ops.Corpus.substringWindows(df, w)

@@ -76,6 +76,7 @@ object TextRunMath {
 
 case class BigramRunStats(child: Expression)
     extends UnaryExpression with ImplicitCastInputTypes {
+  override def prettyName: String = "bigram_run_stats"
 
   override def inputTypes: Seq[DataType] =
     Seq(ArrayType(StringType))

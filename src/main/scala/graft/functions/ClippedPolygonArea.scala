@@ -18,6 +18,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   */
 case class ClippedPolygonArea(children: Seq[Expression])
     extends Expression with ImplicitCastInputTypes {
+  override def prettyName: String = "clipped_polygon_area"
 
   require(children.length == 5, "clipped_polygon_area takes (cx, cy, r, xs, ys)")
 

@@ -16,6 +16,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   */
 case class ClippedSegmentLength(children: Seq[Expression])
     extends Expression with ImplicitCastInputTypes {
+  override def prettyName: String = "clipped_segment_length"
 
   require(children.length == 7, "clipped_segment_length takes 7 arguments")
 

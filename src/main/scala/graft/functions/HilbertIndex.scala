@@ -39,6 +39,7 @@ object HilbertMath {
 case class HilbertIndex(children: Seq[Expression])
     extends Expression with ImplicitCastInputTypes {
   require(children.length == 3, "hilbert_index takes (ix, iy, order)")
+  override def prettyName: String = "hilbert_index"
 
   // analysis-time implicit casts (INT literals → LONG) instead of
   // interpreted-path ClassCastExceptions

@@ -51,6 +51,7 @@ object MinHashMath {
 case class MinHashSignature(children: Seq[Expression])
     extends Expression with ImplicitCastInputTypes {
   require(children.length == 2, "minhash_signature takes (hashes, nPerms)")
+  override def prettyName: String = "minhash_signature"
 
   override def inputTypes: Seq[DataType] =
     Seq(ArrayType(LongType), IntegerType)

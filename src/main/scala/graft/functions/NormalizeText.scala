@@ -26,6 +26,7 @@ object TextNorm {
 case class NormalizeText(children: Seq[Expression])
     extends Expression with ImplicitCastInputTypes {
   require(children.length == 1, "normalize_text takes 1 argument")
+  override def prettyName: String = "normalize_text"
 
   // analysis-time implicit cast instead of an interpreted-path
   // ClassCastException on non-string SQL arguments

@@ -39,6 +39,7 @@ object PolyMath {
 case class PointInPolygon(children: Seq[Expression])
     extends Expression with ImplicitCastInputTypes {
   require(children.length == 4, "point_in_polygon takes (px, py, xs, ys)")
+  override def prettyName: String = "point_in_polygon"
 
   // analysis-time implicit casts instead of interpreted-path
   // ClassCastExceptions on mistyped SQL literals

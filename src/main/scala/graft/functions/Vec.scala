@@ -14,8 +14,7 @@ object Vec {
 
   /** Sequential dot product Σ aᵢ·bᵢ in element order — the native
     * VecDot expression (identical accumulation order to the HOF fold
-    * it replaced, ~10× cheaper; needs GraftFunctions registered, which
-    * GraftSession does via extensions). */
+    * it replaced, ~10× cheaper; resolves through GraftExtensions). */
   def dot(a: Column, b: Column): Column =
     call_function("vec_dot", a, b)
 

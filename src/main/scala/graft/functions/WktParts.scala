@@ -8,24 +8,28 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native WKT parser for the mixed-geometry ingest path
-  * (duckpipe/core.py:117-166 registers whatever geometry the table
-  * holds). One expression call replaces the composed
-  * split/transform/regex column parsers on this hot path: the HOF
-  * parse tree was semantically right but cost ~1 ms/row interpreted
-  * AND several seconds of driver planning + codegen compilation per
-  * query — a compact static call plans instantly and parses in ~µs.
+/** The WKT parser: every `geo.Wkt` ingest path (duckpipe/core.py:117-166
+  * registers whatever geometry the table holds) runs this one kernel.
+  * A compact static call plans instantly and parses in ~µs; the
+  * composed split/transform/regex column parsers it replaced cost
+  * ~1 ms/row interpreted AND several seconds of driver planning +
+  * codegen compilation per query.
   *
   * Accepts POINT / LINESTRING / POLYGON (interior rings ok) /
   * MULTIPOLYGON. Output: ARRAY of parts, each part an ARRAY of rings,
   * each ring STRUCT(xs ARRAY<DOUBLE>, ys ARRAY<DOUBLE>) — point = one
   * 1-vertex ring, line = one open vertex ring. Polygon rings are
   * validated closed (first == last vertex after parsing, >= 4 points
-  * incl. the closing vertex) and stored OPEN, matching geo.Wkt's
-  * column parsers. Malformed input throws with the same
-  * "malformed WKT <kind>" / "unsupported WKT geometry" messages.
+  * incl. the closing vertex) and stored OPEN. Every coordinate must
+  * match the WKT number grammar `Num` — `Double.parseDouble` alone
+  * would also take NaN, Infinity, hex floats, `1d`/`2f` suffixes and
+  * `.5`/`1.`. Malformed input throws "malformed WKT <kind>: <text>";
+  * an unknown geometry throws "unsupported WKT geometry: <text>".
   */
 object WktMath {
+  private val Num =
+    java.util.regex.Pattern.compile("[-+]?[0-9]+(?:\\.[0-9]+)?(?:[eE][-+]?[0-9]+)?")
+
   private def fail(kind: String, wkt: String): Nothing =
     throw new IllegalArgumentException(s"malformed WKT $kind: $wkt")
 
@@ -38,49 +42,51 @@ object WktMath {
     var i = 0
     while (i < vs.length) {
       val toks = vs(i).trim.split("\\s+")
-      if (toks.length != 2) fail(kind, wkt)
-      try {
-        xs(i) = java.lang.Double.parseDouble(toks(0))
-        ys(i) = java.lang.Double.parseDouble(toks(1))
-      } catch { case _: NumberFormatException => fail(kind, wkt) }
+      if (toks.length != 2 || !Num.matcher(toks(0)).matches() ||
+          !Num.matcher(toks(1)).matches())
+        fail(s"$kind vertex (two WKT numbers 'x y')", wkt)
+      xs(i) = java.lang.Double.parseDouble(toks(0))
+      ys(i) = java.lang.Double.parseDouble(toks(1))
       i += 1
     }
     (xs, ys)
   }
 
-  private def ring(body: String, wkt: String): InternalRow = {
-    val (xs, ys) =
-      vertices(body, "POLYGON ring (closed, >= 4 points incl. closing vertex)", wkt)
-    if (xs.length < 4 || xs(0) != xs(xs.length - 1) ||
-        ys(0) != ys(ys.length - 1))
-      fail("POLYGON ring (closed, >= 4 points incl. closing vertex)", wkt)
+  /** `geom` names the enclosing geometry (POLYGON | MULTIPOLYGON). */
+  private def ring(body: String, geom: String, wkt: String): InternalRow = {
+    val (xs, ys) = vertices(body, s"$geom ring", wkt)
+    if (xs.length < 4)
+      fail(s"$geom ring (>= 4 points incl. closing vertex)", wkt)
+    if (xs(0) != xs(xs.length - 1) || ys(0) != ys(ys.length - 1))
+      fail(s"$geom (ring not closed)", wkt)
     InternalRow(
       new GenericArrayData(xs.dropRight(1)),
       new GenericArrayData(ys.dropRight(1)))
   }
 
   /** Ring list "(r1), (r2), …" → array of ring structs. */
-  private def rings(body: String, wkt: String): ArrayData = {
+  private def rings(body: String, geom: String, wkt: String): ArrayData = {
+    val list = s"$geom ring list"
     val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
     var i = 0
     val n = body.length
     while (i < n) {
       while (i < n && (body(i) == ' ' || body(i) == ',')) i += 1
       if (i < n) {
-        if (body(i) != '(') fail("POLYGON ring list", wkt)
+        if (body(i) != '(') fail(list, wkt)
         val close = body.indexOf(')', i)
-        if (close < 0) fail("POLYGON ring list", wkt)
+        if (close < 0) fail(list, wkt)
         val inner = body.substring(i + 1, close)
-        if (inner.indexOf('(') >= 0) fail("POLYGON ring list", wkt)
-        out += ring(inner, wkt)
+        if (inner.indexOf('(') >= 0) fail(list, wkt)
+        out += ring(inner, geom, wkt)
         i = close + 1
         // after a ring only whitespace-then-comma (or end) is legal
         var j = i
         while (j < n && body(j) == ' ') j += 1
-        if (j < n && body(j) != ',') fail("POLYGON ring list", wkt)
+        if (j < n && body(j) != ',') fail(list, wkt)
       }
     }
-    if (out.isEmpty) fail("POLYGON ring list", wkt)
+    if (out.isEmpty) fail(list, wkt)
     new GenericArrayData(out.toArray[Any])
   }
 
@@ -107,7 +113,7 @@ object WktMath {
       val body = stripShell(t, "LINESTRING", "LINESTRING (>= 2 points)", wkt)
       if (body.indexOf('(') >= 0)
         fail("LINESTRING (>= 2 points)", wkt)
-      val (xs, ys) = vertices(body, "LINESTRING (>= 2 points)", wkt)
+      val (xs, ys) = vertices(body, "LINESTRING", wkt)
       if (xs.length < 2) fail("LINESTRING (>= 2 points)", wkt)
       val r = InternalRow(new GenericArrayData(xs), new GenericArrayData(ys))
       new GenericArrayData(Array[Any](new GenericArrayData(Array[Any](r))))
@@ -125,7 +131,7 @@ object WktMath {
           if (depth == 0) fail("MULTIPOLYGON", wkt)
           depth -= 1
           if (depth == 0)
-            out += rings(body.substring(start + 1, i), wkt)
+            out += rings(body.substring(start + 1, i), "MULTIPOLYGON", wkt)
         } else if (depth == 0 && c != ',' && c != ' ')
           fail("MULTIPOLYGON", wkt)
         i += 1
@@ -134,7 +140,7 @@ object WktMath {
       new GenericArrayData(out.toArray[Any])
     } else if (t.startsWith("POLYGON")) {
       val body = stripShell(t, "POLYGON", "POLYGON (ring list)", wkt)
-      new GenericArrayData(Array[Any](rings(body, wkt)))
+      new GenericArrayData(Array[Any](rings(body, "POLYGON", wkt)))
     } else {
       throw new IllegalArgumentException(s"unsupported WKT geometry: $wkt")
     }
@@ -143,6 +149,7 @@ object WktMath {
 
 case class WktParts(child: Expression)
     extends Expression with ImplicitCastInputTypes {
+  override def prettyName: String = "wkt_parts"
 
   override def children: Seq[Expression] = Seq(child)
   override def inputTypes: Seq[DataType] = Seq(StringType)

@@ -23,8 +23,6 @@ object AreaClip {
                 radii: Seq[Double], maxVertexDist: Double): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
-    // native expression reached through the function registry
-    graft.GraftFunctions.register(spark)
     val cell = radii.max + maxVertexDist
     val offsets = Seq(-1L, 0L, 1L)
       .flatMap(dx => Seq(-1L, 0L, 1L).map(dy => (dx, dy))).toDF("dx", "dy")

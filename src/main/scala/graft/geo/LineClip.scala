@@ -19,8 +19,6 @@ object LineClip {
                      radii: Seq[Double], maxSegLen: Double): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
-    // native expression reached through the function registry
-    graft.GraftFunctions.register(spark)
     val cell = radii.max + maxSegLen / 2
     val offsets = Seq(-1L, 0L, 1L)
       .flatMap(dx => Seq(-1L, 0L, 1L).map(dy => (dx, dy))).toDF("dx", "dy")

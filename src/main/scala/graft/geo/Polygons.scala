@@ -65,7 +65,6 @@ object Polygons {
     * of the geometry". Uses the native point_in_polygon expression. */
   def pointOnSurface(df: DataFrame, xsCol: String, ysCol: String,
                      n: Int): DataFrame = {
-    graft.GraftFunctions.register(df.sparkSession)
     val c = centroid(col(xsCol), col(ysCol), n)
     df.withColumn("_c", c)
       .withColumn("_in", call_function("point_in_polygon",

@@ -43,7 +43,6 @@ object SpatialCurve {
   /** Hilbert-curve key (native HilbertIndex expression) — strictly
     * better locality than Z-order; the reference's chunk_by_hilbert. */
   def hilbertKey(df: DataFrame, ix: Column, iy: Column, order: Int): Column = {
-    graft.GraftFunctions.register(df.sparkSession)
     call_function("hilbert_index", ix.cast("long"), iy.cast("long"),
       lit(order.toLong))
   }

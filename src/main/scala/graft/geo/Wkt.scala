@@ -9,193 +9,27 @@ import org.apache.spark.sql.functions._
   * reprojects with ST_Transform on ingest; the landuse/OA feature
   * tables arrive as polygon WKT).
   *
-  * Everything is pure column machinery — regexp validation, split,
-  * array HOFs, the Proj column series for reprojection — so parsing
-  * runs codegen'd and fully distributed with no UDF boundary.
-  * Malformed input fails LOUDLY with the offending string (an ingest
-  * that silently drops or nulls bad geometries poisons every
-  * downstream join at 100 TB).
+  * Every ingest path parses through the one native `wkt_parts` kernel
+  * (functions/WktParts.scala) and reprojects with the Proj column
+  * series, so parsing runs codegen'd and fully distributed with no UDF
+  * boundary. Malformed input fails LOUDLY with the offending string
+  * (an ingest that silently drops or nulls bad geometries poisons
+  * every downstream join at 100 TB).
   *
   * Scope mirrors the engine's planar model: POINT, LINESTRING
   * (polyline → consecutive-pair segment explode feeding the segment
   * operators), single-ring POLYGON (the flat vertex-array form the
   * simple operators consume — interior rings rejected loudly there),
-  * full POLYGON with holes (`parsePolygonRings` → nested ring arrays
-  * for `Polygons.containsRings`/`clippedAreaRings`), and MULTIPOLYGON
-  * (`parseMultiPolygon` → parts exploded to rows).
+  * full POLYGON with holes (`polygonsRings` → nested ring arrays for
+  * `Polygons.containsRings`/`clippedAreaRings`), MULTIPOLYGON
+  * (`multiPolygons` → parts exploded to rows) and a column mixing all
+  * four (`geometries`).
   */
 object Wkt {
-
-  private val Num = "[-+]?(?:[0-9]+)(?:\\.[0-9]+)?(?:[eE][-+]?[0-9]+)?"
-  private val PointRe = s"^\\s*POINT\\s*\\(\\s*($Num)\\s+($Num)\\s*\\)\\s*$$"
-  private val NumFull = s"^$Num$$"
 
   private def fail(kind: String, wkt: Column): Column =
     raise_error(concat(lit(s"malformed WKT $kind: "),
       coalesce(wkt, lit("NULL"))))
-
-  /** `POINT (x y)` → struct(x, y) doubles; anything else throws. */
-  def parsePoint(wkt: Column): Column =
-    when(wkt.rlike(PointRe), struct(
-      regexp_extract(wkt, PointRe, 1).cast("double").as("x"),
-      regexp_extract(wkt, PointRe, 2).cast("double").as("y")))
-    .otherwise(fail("POINT", wkt))
-
-  /** `POLYGON ((x y, …, x y))` → struct(xs, ys) OPEN vertex arrays
-    * (the closing vertex WKT mandates is validated then dropped —
-    * the engine's polygon operators close rings implicitly, matching
-    * `Derive.triangles`). Holes and unclosed rings throw.
-    *
-    * Validation is deliberately STRUCTURAL (paren counts, anchored
-    * header, per-token number regexes over the split vertices), not
-    * one monolithic ring regex: conditional branches block codegen's
-    * subexpression elimination, so the parse tree re-evaluates per
-    * downstream reference — a whole-ring backtracking regex re-run
-    * ~20× per row was this engine's single most expensive scalar
-    * expression (~18 CPU-s at sf0.1; the split/translate form is
-    * ~1 CPU-s for identical accept/reject behavior). */
-  def parsePolygon(wkt: Column): Column = {
-    val t = trim(wkt)
-    // exactly one exterior ring and nothing after it: two "(" (a hole
-    // would add two more), two ")", closing "))" at the very end
-    val structureOk = t.rlike("^POLYGON\\s*\\(\\s*\\(") &&
-      (length(t) - length(translate(t, "(", "")) === 2) &&
-      (length(t) - length(translate(t, ")", "")) === 2) &&
-      t.endsWith("))")
-    // content between the last "(" and the first ")" — the ring body
-    val ring = substring_index(substring_index(t, "(", -1), ")", 1)
-    val pts = transform(split(ring, ","),
-      p => split(trim(p), "\\s+"))
-    val tokensOk = forall(pts, p => size(p) === 2 &&
-      element_at(p, 1).rlike(NumFull) && element_at(p, 2).rlike(NumFull))
-    val xs = transform(pts, p => element_at(p, 1).cast("double"))
-    val ys = transform(pts, p => element_at(p, 2).cast("double"))
-    val closed = element_at(xs, 1) === element_at(xs, -1) &&
-      element_at(ys, 1) === element_at(ys, -1)
-    when(structureOk && tokensOk && size(pts) >= 4,
-      when(closed, struct(
-        slice(xs, lit(1), size(xs) - 1).as("xs"),
-        slice(ys, lit(1), size(ys) - 1).as("ys")))
-      .otherwise(fail("POLYGON (ring not closed)", wkt)))
-    .otherwise(fail(
-      "POLYGON (single exterior ring, >= 4 points incl. closing vertex)", wkt))
-  }
-
-  // ---- ring-set parsing (holes + MULTIPOLYGON) -----------------------
-  // A separator char no valid WKT contains, used to split ring lists /
-  // part lists without a backtracking regex (see parsePolygon's note).
-  private val Sep = "\u0001"
-
-  /** One ring body "x y, x y, …" (closing vertex mandatory) → open
-    * struct(xs, ys); `ok` short-circuits to the loud failure. */
-  private def ringOf(body: Column, ok: Column, wkt: Column): Column = {
-    val pts = transform(split(body, ","), p => split(trim(p), "\\s+"))
-    val tokensOk = forall(pts, p => size(p) === 2 &&
-      element_at(p, 1).rlike(NumFull) && element_at(p, 2).rlike(NumFull))
-    val xs = transform(pts, p => element_at(p, 1).cast("double"))
-    val ys = transform(pts, p => element_at(p, 2).cast("double"))
-    val closed = element_at(xs, 1) === element_at(xs, -1) &&
-      element_at(ys, 1) === element_at(ys, -1)
-    when(ok && tokensOk && size(pts) >= 4 && closed, struct(
-      slice(xs, lit(1), size(xs) - 1).as("xs"),
-      slice(ys, lit(1), size(ys) - 1).as("ys")))
-      .otherwise(fail(
-        "POLYGON ring (closed, >= 4 points incl. closing vertex)", wkt))
-  }
-
-  /** Ring-list body "(r1), (r2), …" → ARRAY<STRUCT<xs, ys>> (ring 1 =
-    * outer, rest holes — the full OGC POLYGON body). Kept as one
-    * struct array: splitting into parallel rxs/rys arrays INSIDE the
-    * expression would instantiate the whole parse subtree twice
-    * (alias expansion duplicates it at analysis), doubling Catalyst's
-    * planning cost — callers split AFTER the parse lands in a column. */
-  private def ringStructsOf(body: Column, ok: Column, wkt: Column): Column = {
-    val rings = split(
-      regexp_replace(body, "\\)\\s*,\\s*\\(", s")$Sep("), Sep)
-    val shapeOk = ok &&
-      forall(rings, r => trim(r).rlike("^\\([^()]*\\)$"))
-    val parsed = transform(rings, r =>
-      ringOf(substring_index(substring_index(trim(r), "(", -1), ")", 1),
-        lit(true), wkt))
-    when(shapeOk, parsed).otherwise(fail("POLYGON ring list", wkt))
-  }
-
-  /** Ring-list body → struct(rxs, rys) nested arrays (legacy shape —
-    * duplicates the parse tree; prefer ringStructsOf in new code). */
-  private def ringsOf(body: Column, ok: Column, wkt: Column): Column = {
-    val parsed = ringStructsOf(body, ok, wkt)
-    struct(
-      transform(parsed, r => r.getField("xs")).as("rxs"),
-      transform(parsed, r => r.getField("ys")).as("rys"))
-  }
-
-  /** `POLYGON ((outer), (hole), …)` → struct(rxs, rys) nested vertex
-    * arrays — the FULL polygon form with interior rings, which real
-    * landuse/OA tables carry (LanduseCalculator.py:99-157). Ring 1 is
-    * the exterior; every further ring is a hole. Rings are validated
-    * closed then stored open, matching the single-ring parser. */
-  def parsePolygonRings(wkt: Column): Column = {
-    val t = trim(wkt)
-    val structureOk = t.rlike("^POLYGON\\s*\\(\\s*\\(") && t.endsWith(")") &&
-      (length(t) - length(translate(t, "(", "")) ===
-        length(t) - length(translate(t, ")", ""))) &&
-      !t.contains(Sep)
-    val body = regexp_replace(t, "^POLYGON\\s*\\(", "")
-    val inner = body.substr(lit(1), length(body) - 1) // drop trailing ")"
-    when(structureOk, ringsOf(inner, lit(true), wkt))
-      .otherwise(fail("POLYGON (ring list)", wkt))
-  }
-
-  /** `MULTIPOLYGON (((…)), ((…), (hole)), …)` → ARRAY of
-    * struct(rxs, rys) ring sets, one per part — real admin/landuse
-    * layers are routinely multi-part. Parts explode to rows via
-    * `multiPolygons` (a part is the unit the polygon operators
-    * consume; keeping parts as rows is what distributes at 100 TB). */
-  def parseMultiPolygon(wkt: Column): Column = {
-    val t = trim(wkt)
-    val structureOk = t.rlike("^MULTIPOLYGON\\s*\\(\\s*\\(\\s*\\(") &&
-      t.endsWith(")") &&
-      (length(t) - length(translate(t, "(", "")) ===
-        length(t) - length(translate(t, ")", ""))) &&
-      !t.contains(Sep)
-    val body0 = regexp_replace(t, "^MULTIPOLYGON\\s*\\(", "")
-    val body = body0.substr(lit(1), length(body0) - 1) // drop final ")"
-    // part separator: "))" , "((" — normalize then split; each part is
-    // then a full ring-list wrapped in one paren pair: "((r1), (r2))"
-    val parts = split(
-      regexp_replace(body, "\\)\\s*\\)\\s*,\\s*\\(\\s*\\(", s"))$Sep(("), Sep)
-    val partsOk = structureOk &&
-      forall(parts, p => trim(p).startsWith("(") && trim(p).endsWith(")"))
-    val parsed = transform(parts, p => {
-      val pt = trim(p)
-      ringsOf(pt.substr(lit(2), length(pt) - 2), lit(true), wkt)
-    })
-    when(partsOk, parsed).otherwise(fail("MULTIPOLYGON", wkt))
-  }
-
-  /** `LINESTRING (x y, …, x y)` → struct(xs, ys) vertex arrays (≥ 2
-    * points; no closure requirement — lines are open by definition).
-    * Same structural validation strategy as parsePolygon: paren
-    * counts + anchored header + per-token number regexes, never one
-    * backtracking ring regex (see parsePolygon's codegen note). The
-    * reference's heaviest feature tables are LINE layers — roads
-    * (duckpipe/calculator/RoadLLWCalculator.py:73-80). */
-  def parseLineString(wkt: Column): Column = {
-    val t = trim(wkt)
-    val structureOk = t.rlike("^LINESTRING\\s*\\(") &&
-      (length(t) - length(translate(t, "(", "")) === 1) &&
-      (length(t) - length(translate(t, ")", "")) === 1) &&
-      t.endsWith(")")
-    val body = substring_index(substring_index(t, "(", -1), ")", 1)
-    val pts = transform(split(body, ","), p => split(trim(p), "\\s+"))
-    val tokensOk = forall(pts, p => size(p) === 2 &&
-      element_at(p, 1).rlike(NumFull) && element_at(p, 2).rlike(NumFull))
-    val xs = transform(pts, p => element_at(p, 1).cast("double"))
-    val ys = transform(pts, p => element_at(p, 2).cast("double"))
-    when(structureOk && tokensOk && size(pts) >= 2,
-      struct(xs.as("xs"), ys.as("ys")))
-      .otherwise(fail("LINESTRING (>= 2 points)", wkt))
-  }
 
   /** Reproject a parsed struct(x, y) from `epsg` into the reference
     * CRS (EPSG:5179), the ingest-time ST_Transform of the reference:
@@ -210,20 +44,14 @@ object Wkt {
 
   /** Shared native-parse entry for the single-kind ingest paths: the
     * `wkt_parts` kernel (one compiled static call — the same parser
-    * `geometries` certifies end-to-end on identical text) behind a
-    * cheap prefix guard that keeps each path's loud kind rejection,
-    * landed through ONE posexplode so the parse runs exactly once per
-    * row (a `when`-wrapped parse referenced per output column blocks
-    * codegen subexpression elimination and re-parses per reference —
-    * the parsePolygon codegen note). Every part of every kind is an
-    * ARRAY of ring STRUCT(xs, ys); single-part kinds keep their row.
-    * The composed column parsers above are retained for reference and
-    * spec coverage, but the hot ingest paths no longer pay their
-    * interpreted per-vertex HOF/regex trees (~1 ms/row) or their
-    * multi-second planning/codegen tax. */
+    * `geometries` runs) behind a cheap prefix guard that keeps each
+    * path's loud kind rejection, landed through ONE posexplode so the
+    * parse runs exactly once per row (a `when`-wrapped parse referenced
+    * per output column blocks codegen subexpression elimination and
+    * re-parses per reference). Every part of every kind is an ARRAY of
+    * ring STRUCT(xs, ys); single-part kinds keep their row. */
   private def nativeParts(df: DataFrame, wktCol: String,
                           prefix: String, kind: String): DataFrame = {
-    graft.GraftFunctions.register(df.sparkSession)
     val guarded = when(trim(col(wktCol)).startsWith(prefix),
       call_function("wkt_parts", col(wktCol)))
       .otherwise(fail(kind, col(wktCol)))
@@ -278,7 +106,7 @@ object Wkt {
   private[graft] def polygonsStage(df: DataFrame, wktCol: String,
                                    epsg: Int): DataFrame = {
     // single exterior ring only — the flat-vertex-array contract; a
-    // holed polygon fails as loudly as the composed parser did
+    // holed polygon fails loudly
     val ring = when(size(col("_part")) === 1, element_at(col("_part"), 1))
       .otherwise(fail(
         "POLYGON (single exterior ring, >= 4 points incl. closing vertex)",
@@ -400,8 +228,8 @@ object Wkt {
     *   rxs, rys   nested ring arrays (point = one 1-vertex ring,
     *              line = one open vertex ring, polygon = rings)
     *   x, y       convenience planar coords (points only, else NULL)
-    * CASE branches evaluate lazily per row, so each parser only runs
-    * on its own geometry kind. */
+    * The kernel dispatches on the same prefixes, so one parse per row
+    * serves every kind. */
   def geometries(df: DataFrame, wktCol: String,
                  epsg: Int = 5179): DataFrame =
     geometriesStage(df, wktCol, epsg).localCheckpoint(false)
@@ -417,18 +245,14 @@ object Wkt {
       .otherwise(raise_error(concat(
         lit("unsupported WKT geometry: "),
         coalesce(col(wktCol), lit("NULL")))))
-    // The parse itself is the NATIVE wkt_parts expression (one static
-    // call, doGenCode) — the composed HOF/regex column parsers are
-    // kept for the single-kind ingest paths, but on this mixed hot
-    // path their giant expression tree cost seconds of driver
-    // planning + codegen compilation PER QUERY and ~1 ms/row
-    // interpreted. Two designs that do NOT work here, for the record:
-    // one CASE over all four column parsers (the planning/codegen
-    // cost above), and per-kind filtered branches unioned (attribute
+    // The parse is the native wkt_parts expression (one static call,
+    // doGenCode). Two designs that do NOT work here, for the record:
+    // one CASE over four composed HOF/regex column parsers (seconds of
+    // driver planning + codegen compilation PER QUERY and ~1 ms/row
+    // interpreted), and per-kind filtered branches unioned (attribute
     // re-deduplication under a Generate above the 4-way self-union
     // CROSSES the branch expressions — points reached the
     // MULTIPOLYGON parser).
-    graft.GraftFunctions.register(df.sparkSession)
     val parts = call_function("wkt_parts", col(wktCol))
     val projected = df.withColumn("geom_type", kind)
       .withColumn("_parts", parts)
@@ -489,30 +313,28 @@ object Wkt {
   // cast bottoms out in, so the text — and the parse∘format
   // roundtrip certification — is bit-identical (WktTextSpec pins each
   // shape against the cast chain on real Derive geometries).
-  // Resolution relies on GraftExtensions (GraftSession installs it);
-  // foreign sessions call graft.GraftFunctions.register first.
 
   /** struct-free egress: (x, y) → `POINT (x y)` (shortest round-trip
     * double formatting — parse(format(v)) is bit-exact). */
   def toWktPoint(x: Column, y: Column): Column =
     call_function("wkt_point_text", x, y)
 
-  /** Vertex arrays → `LINESTRING (…)`, inverse of parseLineString. */
+  /** Vertex arrays → `LINESTRING (…)`, inverse of `lines`. */
   def toWktLineString(xs: Column, ys: Column): Column =
     call_function("wkt_line_text", xs, ys)
 
   /** Open vertex arrays → `POLYGON ((…))` with the ring closed
-    * textually, inverse of `parsePolygon`. */
+    * textually, inverse of `polygons`. */
   def toWktPolygon(xs: Column, ys: Column): Column =
     call_function("wkt_poly_text", xs, ys)
 
   /** Nested ring arrays → `POLYGON ((outer), (hole), …)`, inverse of
-    * `parsePolygonRings`. */
+    * `polygonsRings`. */
   def toWktPolygonRings(rxs: Column, rys: Column): Column =
     call_function("wkt_rings_text", rxs, rys)
 
   /** Array of struct(rxs, rys) parts → `MULTIPOLYGON (…)`, inverse of
-    * `parseMultiPolygon`. */
+    * `multiPolygons` (parts ordered by `part_idx`). */
   def toWktMultiPolygon(parts: Column): Column =
     call_function("wkt_multi_text", parts)
 }

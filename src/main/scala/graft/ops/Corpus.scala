@@ -739,7 +739,6 @@ object Corpus {
 
   def textDecontamSpan(s: SparkSession, dir: String,
                        w: Int = 25): DataFrame = {
-    graft.GraftFunctions.register(s)
     decontamSpanCore(benchWindows(s, dir, w),
       docs(s, dir).filter(col("doc_id") % 31 =!= 0), w)
   }
@@ -793,7 +792,6 @@ object Corpus {
     * O(len²) and measured 1052 CPU-s. Equivalence to the naive form
     * is spec-pinned. */
   def textRepetition(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     docs(s, dir)
       .select(col("doc_id"),
         round(size(array_distinct(toks)).cast("double") / size(toks), 6)
@@ -981,7 +979,6 @@ object Corpus {
     // re-exploding the pinned token arrays per pass is cheaper than
     // checkpoint-writing + re-reading millions of tiny gram strings
     // (measured ~20 → 8.3 CPU-s at sf0.1 from dropping the hot()).
-    graft.GraftFunctions.register(s)
     val gramRows = docs(s, dir)
       .select(explode(
         call_function("word_ngrams", col("toks"), lit(3))).as("g"))
@@ -1033,7 +1030,6 @@ object Corpus {
     * the scan itself. Thresholds follow the Gopher-style filters the
     * individual signal operators document. */
   def corpusQualityFilter(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     docs(s, dir)
       .select(col("source"),
         size(toks).as("n_tok"),
@@ -1300,7 +1296,6 @@ object Corpus {
     * standalone op certifies (broadcast benchmark index, md5-argmin
     * keeper, md5 instance placement). */
   def pipelineV4(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val d = docs(s, dir)
     val bench = d.filter(col("doc_id") % 31 === 0)
     val corpus = d.filter(col("doc_id") % 31 =!= 0)
@@ -1529,7 +1524,6 @@ object Corpus {
     * checkpointed token stream. */
   def sampleDsir(s: SparkSession, dir: String, target: String = "src0",
                  buckets: Int = 256): DataFrame = {
-    graft.GraftFunctions.register(s)
     // fold token MULTIPLICITY per (doc, bucket) before anything else:
     // the exploded stream collapses map-side into ≤ `buckets` rows per
     // doc, so the checkpoint, the bucket-count pass and the per-doc
@@ -1628,7 +1622,6 @@ object Corpus {
     */
   def packSequences(s: SparkSession, dir: String, cap: Int = 4096,
                     buckets: Int = 0): DataFrame = {
-    graft.GraftFunctions.register(s)
     val base = docs(s, dir).select(col("source"), col("doc_id"),
       least(size(toks).cast("long"), lit(cap.toLong)).as("n_tok"))
     // Per-bucket FFD is O(items × open_bins): a FIXED bucket count lets
@@ -1787,7 +1780,6 @@ object Corpus {
   }
 
   def dedupSubstrings(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     substringDedupCore(docs(s, dir), 50)
   }
 
@@ -1888,7 +1880,6 @@ object Corpus {
     * vocab never broadcasts) → one source aggregate.
     */
   private[graft] def cdcChunks(docsDf: DataFrame): DataFrame = {
-    graft.GraftFunctions.register(docsDf.sparkSession)
     docsDf
       .select(col("doc_id"), col("source"),
         posexplode(call_function("cdc_chunks", split(col("text"), " ")))
@@ -2027,7 +2018,6 @@ object Corpus {
     * with fixed parenthesization then round at 6 dp. One token pass,
     * one per-source rank window over ≤1000 rows per source. */
   def corpusZipf(s: SparkSession, dir: String, topR: Int = 1000): DataFrame = {
-    graft.GraftFunctions.register(s)
     val freq = docs(s, dir)
       .select(col("source"), explode(toks).as("w"))
       .filter(col("w") =!= "")

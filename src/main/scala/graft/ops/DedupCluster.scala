@@ -193,7 +193,6 @@ object DedupCluster {
     * near-dup pair) keep themselves via the left-join coalesce.
     */
   def corpusSemanticDedup(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val e = Tables.fanout(Tables.load(s, dir, "embeddings"))
       .select(col("vec_id"), col("label"),
         graft.functions.Vec.asDouble(col("embedding")).as("v"))

@@ -145,7 +145,6 @@ object Events {
   /** Global top-25 token 3-grams across the corpus — vocabulary /
     * phrase-frequency statistics for the text pipeline. */
   def topNgrams(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     Text.docToks(s, dir)
       .select(explode(
         call_function("word_ngrams", col("toks"), lit(3))).as("ngram"))

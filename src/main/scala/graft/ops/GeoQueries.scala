@@ -673,7 +673,6 @@ object GeoQueries {
 
   // ---- Hilbert-curve key (native expression; reference hilbert chunking)
   def hilbert(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     graft.Tables.load(s, dir, "customer")
       .select(col("c_custkey").as("id"),
         call_function("hilbert_index",
@@ -718,7 +717,6 @@ object GeoQueries {
     * by first vertex; triangles span ≤ 600×400 m from their anchor (diag ≈ 721), reach 800 covers).
     */
   def polyTag(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val tris = Derive.triangles(s, dir)
       .select(col("poly_id"), col("xs"), col("ys"),
         col("xs")(0).as("x"), col("ys")(0).as("y"))
@@ -760,7 +758,6 @@ object GeoQueries {
     * pruning is the same grid as geo_poly_tag (the hole never extends
     * the outer ring's reach). */
   def polyTagHoled(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val polys = Derive.holedTriangles(s, dir)
       .select(col("poly_id"), col("rxs"), col("rys"),
         col("rxs")(0)(0).as("x"), col("rys")(0)(0).as("y"))
@@ -801,7 +798,6 @@ object GeoQueries {
     * containment tagging on the PARSED rings — against the unchanged
     * polyTagHoled oracle. */
   def wktHoledTag(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val spread = graft.Tables.fanout(Derive.holedTriangles(s, dir))
     val asWkt = spread.select(col("poly_id"),
       graft.geo.Wkt.toWktPolygonRings(col("rxs"), col("rys")).as("wkt"))
@@ -1105,7 +1101,6 @@ object GeoQueries {
     * is deterministic column arithmetic mirrored operation-for-
     * operation in the oracle — hash-exact without rounding. */
   private def centroidOf(s: SparkSession, tris: DataFrame): DataFrame = {
-    graft.GraftFunctions.register(s)
     // degenerate (collinear) rings have no centroid — drop them before
     // the shoelace division (ANSI mode would throw on /0)
     val nd = tris.filter(Polygons.signedArea2(col("xs"), col("ys"), 3) =!= 0.0)
@@ -1132,7 +1127,7 @@ object GeoQueries {
     * rounding. At 100 TB: fanout → explode → filter → one shuffle. */
   /** Library form: the G×G cells covering each (poly_id, xs, ys)
     * polygon by the cell-center rule — (poly_id, ix, iy) rows. Session
-    * must have the graft function registry (GraftFunctions.register). */
+    * must carry the graft kernels (GraftSession installs them). */
   def gridCells(tris: DataFrame, g: Double): DataFrame =
     tris
       .withColumn("ix", explode(sequence(
@@ -1156,7 +1151,6 @@ object GeoQueries {
         min("iy").as("iy_min"), max("iy").as("iy_max"))
 
   def rasterize(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     gridCover(Tables.fanout(Derive.triangles(s, dir)), 50.0)
       .orderBy("poly_id")
   }
@@ -1210,7 +1204,6 @@ object GeoQueries {
     * derivation both engines); landuse cells dedup per (code, cell) so
     * overlapping same-code polygons don't double-count. */
   def overlay(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val cells = Tables.hot(
       gridCells(Tables.fanout(Derive.triangles(s, dir)), 50.0))
     val oa = cells.filter(col("poly_id") % 2 === 1)

@@ -814,7 +814,6 @@ object Graph {
     // C(cap, 2) fan-out cap and the 2^31 pack range), and the pair
     // aggregate hashes a single primitive key (HashAggregate fast
     // path) with map-side partials
-    graft.GraftFunctions.register(s)
     val pairs = baskets
       .select(explode(call_function("pair_codes", col("pks"),
         lit(BasketCap))).as("code"))

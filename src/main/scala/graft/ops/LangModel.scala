@@ -86,7 +86,6 @@ object LangModel {
     * key SHUFFLE (bigram vocab is far too large to broadcast at web
     * scale), all aggregations map-side combined, 6 dp float gate. */
   def textBigramLp(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     // native word_ngrams(toks, 2): the bigram stream in one compiled
     // pass (the former struct-transform HOF ran interpreted per
     // position), then MULTIPLICITY-FOLD BEFORE the checkpoint (the
@@ -170,7 +169,6 @@ object LangModel {
   val MaxLangidLangs = 64
 
   def textLangidStat(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     // native char_ngrams: the same trigram strings as the former
     // transform(sequence, i -> substring) HOF — which Catalyst runs
     // INTERPRETED per position — in one compiled pass

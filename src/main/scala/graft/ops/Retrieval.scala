@@ -280,7 +280,6 @@ object Retrieval {
     * bucket counts are ONE map-side-combined aggregate (≤64 rows per
     * doc ever shuffle), the pair join is a plain equi-join on id. */
   def mmAlign(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val buckets = 64
     val cnts = docs(s, dir)
       .select(col("doc_id"), col("source"), explode(toks).as("w"))

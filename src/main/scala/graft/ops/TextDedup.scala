@@ -39,7 +39,6 @@ object TextDedup {
     * (doc_id, hs) rows distinct by construction — the global distinct
     * shuffle the HOF form needed is gone. */
   private def shinglesHashed(d: DataFrame): DataFrame = {
-    graft.GraftFunctions.register(d.sparkSession)
     d.select(col("doc_id"),
       explode(call_function("shingle_hashes", toks, lit(3))).as("hs"))
   }
@@ -190,7 +189,6 @@ object TextDedup {
   val BandRows = 2 // 32 bands × 2 rows
 
   def dedupMinhash(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     // per-doc SORTED distinct shingle-hash ARRAY: signatures become a
     // pure map stage (native minhash_signature computes all 64
     // permutation minima in one pass — bit-identical to the former
@@ -286,7 +284,6 @@ object TextDedup {
     }
 
   def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val idx = incIndex(s, dir)
     val base = Tables.hot(
       docs(s, dir).filter(col("doc_id") % 4 === 0)
@@ -521,7 +518,6 @@ object TextDedup {
     * only to discard all but the minimum. Bit-identical selection
     * (unsigned digest order IS hex order — MinMd5Spec pins it). */
   def textFingerprint(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     docs(s, dir).select(col("doc_id"),
         call_function("min_md5", toks, lit(4)).as("fp"))
       .orderBy("doc_id")
@@ -539,7 +535,6 @@ object TextDedup {
     * the oracle reduces to lower(); the Unicode path (NFKD, accent
     * strip, ligatures) is covered by NormalizeTextSpec. */
   def textNormalize(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     docs(s, dir)
       .selectExpr("doc_id", "md5(normalize_text(text)) AS nh")
       .orderBy("doc_id")
@@ -562,7 +557,6 @@ object TextDedup {
     * per-doc aggregate. Shingles travel as 8-byte xxhash64 like the
     * rest of the dedup family (same collision argument). */
   def textDupCoverage(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     // per-doc-distinct native shingle pass — (doc_id, hs) rows are
     // distinct by construction, no global distinct shuffle
     val sh = docs(s, dir).select(col("doc_id"),
@@ -775,7 +769,6 @@ object TextDedup {
     require(n <= NgramMaxDocs,
       s"dedup_minhash_est is the small-scale calibration audit ($n docs > " +
         s"cap $NgramMaxDocs); at scale trust dedup_minhash's LSH bands")
-    graft.GraftFunctions.register(s)
     // native md5_shingles: same 60-bit md5-prefix values as the former
     // interpreted HOF chain, distinct within the doc in one pass
     val sh = Tables.hot(d.select(col("doc_id"),

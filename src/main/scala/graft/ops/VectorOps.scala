@@ -25,7 +25,6 @@ object VectorOps {
   private val QueryFilter = "vec_id % 100 = 0"
 
   private def emb(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s) // vec_dot / vec_l2 native exprs
     Tables.fanout(Tables.load(s, dir, "embeddings"))
       .select(col("vec_id"), Vec.asDouble(col("embedding")).as("v"))
   }
@@ -1123,7 +1122,6 @@ object VectorOps {
 
   private def pcaTrain(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    graft.GraftFunctions.register(s)
     val e = graft.Artifacts.pin(emb(s, dir))
     val n = broadcast(e.agg(count(lit(1)).as("n")))
     val dec = org.apache.spark.sql.types.DecimalType(38, 12)

@@ -65,7 +65,6 @@ object StreamDedup {
     */
   def incrementalDedupStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.TextDedup
-    graft.GraftFunctions.register(spark)
     val isNew = col("doc_id") % 4 === 0
 
     val baseDocs = graft.Tables.load(spark, dir, "documents")
@@ -123,7 +122,6 @@ object StreamDedup {
   def decontamSpanStream(spark: SparkSession, dir: String,
                          w: Int = 25): DataFrame = {
     import graft.ops.Corpus
-    graft.GraftFunctions.register(spark)
     val isBench = col("doc_id") % 31 === 0
     val bench = graft.Tables.hot(
       Corpus.substringWindows(
@@ -199,7 +197,6 @@ object StreamDedup {
     * per doc is the final state). Final per-doc rows equal
     * ops.Retrieval.bm25Scores exactly (EventStreamSpec cert #19). */
   def bm25ScoreStream(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(spark)
     val stats = broadcast(graft.Tables.hot(
       graft.ops.Retrieval.bm25Stats(spark, dir)))
     val t = split(col("text"), " ")
@@ -224,7 +221,6 @@ object StreamDedup {
     * drive a two-phase file source. */
   def bm25SourceStream(spark: SparkSession, dir: String,
                        docsStream: DataFrame): DataFrame = {
-    graft.GraftFunctions.register(spark)
     val stats = broadcast(graft.Tables.hot(
       graft.ops.Retrieval.bm25Stats(spark, dir)))
     val t = split(col("text"), " ")
@@ -241,7 +237,6 @@ object StreamDedup {
   }
 
   def alignGateStream(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(spark)
     val toks = split(col("text"), " ")
     def bucketOf(w: org.apache.spark.sql.Column) =
       conv(substring(md5(concat(lit("clip:"), w)), 1, 8), 16, 10)
@@ -288,7 +283,6 @@ object StreamDedup {
     * batch orderBy(cos DESC, cid) rank-1 exactly (EventStreamSpec
     * cert #20). */
   def annIvfStream(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(spark)
     val (assigned, cents) = graft.ops.VectorOps.ivfIndex(spark, dir)
     val centArr = broadcast(graft.Tables.hot(cents.agg(
       array_sort(collect_list(struct(col("cent_id"), col("cv"))))

@@ -37,6 +37,8 @@ object ExplainStage {
       "wkt_polygons" -> (s => Wkt.polygonsStage(polyWkt(s), "wkt", 5179)),
       "wkt_lines" -> (s => Wkt.linesStage(lineWkt(s), "wkt", 5179)),
       "wkt_rings" -> (s => Wkt.polygonsRingsStage(polyWkt(s), "wkt", 5179)),
+      "wkt_multi" -> (s => Wkt.multiPolygonsStage(
+        graft.ops.GeoQueries.multiPolyWktText(s, dir), "wkt", 5179)),
       "wkt_geometries" -> (s => Wkt.geometriesStage(pointWkt(s), "wkt", 5179)))
 
     args.tail.foreach { name =>

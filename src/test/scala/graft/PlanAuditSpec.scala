@@ -353,7 +353,6 @@ class PlanAuditSpec extends SparkSpec {
     // the window-keying stage (pre-checkpoint — the final plan reads
     // the checkpointed blocks): native rolling hash, no slice+concat
     // window-string materialization anywhere
-    graft.GraftFunctions.register(spark)
     val dw = collectAll(ops.Corpus.substringWindows(
       graft.Tables.load(spark, sfDir, "documents"), 50)
       .queryExecution.executedPlan)

@@ -14,7 +14,6 @@ import graft.SparkSpec
 class CdcChunksSpec extends SparkSpec {
 
   test("cdc_chunks is bit-identical to the windowed rebuild chain") {
-    graft.GraftFunctions.register(spark)
     import spark.implicits._
     // edge docs: multi-space runs (split keeps empty tokens), the
     // empty string (split('') = ['']), and sub-trigram docs where no
@@ -67,7 +66,6 @@ class CdcChunksSpec extends SparkSpec {
   }
 
   test("cdc_chunks null handling: null array -> null; null token -> loud") {
-    graft.GraftFunctions.register(spark)
     import spark.implicits._
     val nullArr = Seq(Tuple1(Option.empty[Seq[String]]))
       .toDF("t")

@@ -60,7 +60,6 @@ class ClippedPolygonAreaSpec extends SparkSpec {
   test("ring-set clipped area: outer minus holes") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.GraftFunctions.register(spark)
     // outer 100x100 square with a 20x20 hole at its center
     val rings = Seq((
       Seq(Seq(0.0, 100.0, 100.0, 0.0), Seq(40.0, 60.0, 60.0, 40.0)),
@@ -130,7 +129,6 @@ class ClippedPolygonAreaSpec extends SparkSpec {
   }
 
   test("SQL surface with mistyped (integer) literals casts implicitly") {
-    graft.GraftFunctions.register(spark)
     val rows = spark.sql(
       """SELECT clipped_polygon_area(0, 0, 1000, array(0.0, 30.0, 0.0),
         |                            array(0.0, 0.0, 40.0)) AS a,

@@ -1,12 +1,11 @@
 package graft.functions
 
-import graft.{GraftFunctions, SparkSpec}
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 class ClippedSegmentLengthSpec extends SparkSpec {
 
   test("geometric fixtures via the SQL surface") {
-    GraftFunctions.register(spark)
     def clip(cx: Double, cy: Double, r: Double,
              x1: Double, y1: Double, x2: Double, y2: Double): Double =
       spark.sql(
@@ -30,7 +29,6 @@ class ClippedSegmentLengthSpec extends SparkSpec {
   }
 
   test("codegen and interpreted paths agree") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = (1 to 100).map { i =>
       (i.toDouble % 7, i.toDouble % 11, 3.0 + i % 5,

@@ -21,7 +21,6 @@ class MinMd5Spec extends SparkSpec {
         .mkString(" ")
     } :+ "" :+ "one two three" :+ "one two three four"
     import spark.implicits._
-    graft.GraftFunctions.register(spark)
     val toks = split(col("text"), " ")
     val df = rows.toDF("text")
     val got = df.select(

@@ -1,13 +1,12 @@
 package graft.functions
 
-import graft.{GraftFunctions, SparkSpec}
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 class NormalizeTextSpec extends SparkSpec {
   import spark.implicits._
 
   test("NFKC folding, accent stripping, lowercasing via SQL surface") {
-    GraftFunctions.register(spark)
     val cases = Seq(
       ("Caf\u00e9", "cafe"),            // precomposed e-acute
       ("Cafe\u0301", "cafe"),           // decomposed e + combining acute
@@ -24,7 +23,6 @@ class NormalizeTextSpec extends SparkSpec {
   }
 
   test("normalization is idempotent over the documents corpus") {
-    GraftFunctions.register(spark)
     val d = graft.Tables.load(spark, sfDir, "documents")
       .selectExpr("normalize_text(text) AS n1")
       .selectExpr("n1", "normalize_text(n1) AS n2")

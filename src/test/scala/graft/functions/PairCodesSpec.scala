@@ -9,10 +9,8 @@ import graft.SparkSpec
   * second argument silently, leaving the kernel default in charge). */
 class PairCodesSpec extends SparkSpec {
 
-  private def reg() = graft.GraftFunctions.register(spark)
-
   test("pair_codes emits exactly the packed C(n,2) ordered pairs") {
-    reg(); import spark.implicits._
+    import spark.implicits._
     val got = Seq(Seq(2L, 5L, 9L)).toDF("a")
       .select(explode(call_function("pair_codes", col("a"))).as("c"))
       .as[Long].collect().toSet
@@ -25,7 +23,7 @@ class PairCodesSpec extends SparkSpec {
   }
 
   test("pair_codes null element fails LOUDLY, never reads as 0") {
-    reg(); import spark.implicits._
+    import spark.implicits._
     val e = intercept[Exception] {
       Seq(Seq[java.lang.Long](1L, null, 3L)).toDF("a")
         .select(call_function("pair_codes", col("a"))).collect()
@@ -36,7 +34,7 @@ class PairCodesSpec extends SparkSpec {
   }
 
   test("pair_codes 2-arg SQL form threads the cap; bad arity rejected") {
-    reg(); import spark.implicits._
+    import spark.implicits._
     val df = Seq(Seq(1L, 2L, 3L, 4L)).toDF("a")
     // cap 3 < basket 4 must trip the in-kernel guard — proof the SQL
     // argument reaches the kernel instead of the default 1000

@@ -1,13 +1,12 @@
 package graft.functions
 
-import graft.{GraftFunctions, SparkSpec}
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 class PointInPolygonSpec extends SparkSpec {
   import spark.implicits._
 
   test("unit-square and concave fixtures via SQL surface") {
-    GraftFunctions.register(spark)
     val square = "array(0D,1D,1D,0D), array(0D,0D,1D,1D)"
     def in(px: Double, py: Double, poly: String): Boolean =
       spark.sql(s"SELECT point_in_polygon(${px}D, ${py}D, $poly)").head().getBoolean(0)
@@ -23,7 +22,6 @@ class PointInPolygonSpec extends SparkSpec {
   }
 
   test("ring-set containment: holes exclude, islands-in-holes re-include") {
-    GraftFunctions.register(spark)
     // outer 10x10 square, hole 4..6 square, island 4.5..5.5 square
     val rings = Seq((
       Seq(Seq(0.0, 10.0, 10.0, 0.0), Seq(4.0, 6.0, 6.0, 4.0),
@@ -46,7 +44,6 @@ class PointInPolygonSpec extends SparkSpec {
   }
 
   test("polygon containment join: points to derived triangles") {
-    GraftFunctions.register(spark)
     // triangles keyed by cell, joined to points — the polygon analogue
     // of the landuse intersect (each point tagged with containing poly)
     val polys = Seq(

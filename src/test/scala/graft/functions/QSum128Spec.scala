@@ -17,7 +17,6 @@ class QSum128Spec extends SparkSpec {
       .cast("double") / math.pow(10, s)
 
   test("qsum128 equals the floor-quantized long sum on continuous data") {
-    graft.GraftFunctions.register(spark)
     // continuous doubles (products of prices) — exactly the inputs the
     // dsum128 digit guard rejects and qsum128 exists for
     val l = graft.Tables.load(spark, sfDir, "lineitem")
@@ -39,7 +38,6 @@ class QSum128Spec extends SparkSpec {
   }
 
   test("qsum128: negatives, nulls, empty groups, partial merges") {
-    graft.GraftFunctions.register(spark)
     val rows = (1 to 100000).map { i =>
       val v = if (i % 97 == 0) null
         else java.lang.Double.valueOf((i % 2001 - 1000) * math.Pi / 7)
@@ -61,7 +59,6 @@ class QSum128Spec extends SparkSpec {
   }
 
   test("qsum128 exceeds the long-sum range without wrapping") {
-    graft.GraftFunctions.register(spark)
     // 5M rows of 1e3 at scale 12 → Σ quantized = 5e21 ≫ 2^63: a plain
     // long sum wraps silently; the 128-bit accumulator must not
     val big = spark.range(5000000)
@@ -72,7 +69,6 @@ class QSum128Spec extends SparkSpec {
   }
 
   test("qsum128 fails loudly past the 2^51 quantization envelope") {
-    graft.GraftFunctions.register(spark)
     val big = Seq((1, 1e13)).toDF("g", "v") // 1e13 * 1e4 > 2^51
     val e = intercept[Exception] {
       big.groupBy("g").agg(q128(col("v"), 4)).collect()

@@ -13,7 +13,6 @@ class Sum128Spec extends SparkSpec {
     sum(c.cast(DecimalType(18, s))).cast("double")
 
   test("dsum128 equals the decimal sum bit-for-bit on real data") {
-    graft.GraftFunctions.register(spark)
     val l = graft.Tables.load(spark, sfDir, "lineitem")
     val disc = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
     // the dsum contract: scale >= the value's true decimal digits
@@ -40,7 +39,6 @@ class Sum128Spec extends SparkSpec {
   }
 
   test("dsum128: negatives, nulls, empty groups, partial merges") {
-    graft.GraftFunctions.register(spark)
     // many partitions force real partial/merge paths; negative values
     // exercise the sign-extended 128-bit carry; nulls contribute nothing
     val rows = (1 to 100000).map { i =>
@@ -67,7 +65,6 @@ class Sum128Spec extends SparkSpec {
   }
 
   test("dsum128 fails loudly outside the 2^51 exactness envelope") {
-    graft.GraftFunctions.register(spark)
     val big = Seq((1, 1e13)).toDF("g", "v") // 1e13 * 1e4 > 2^51
     val e = intercept[Exception] {
       big.groupBy("g").agg(d128(col("v"), 4)).collect()
@@ -78,7 +75,6 @@ class Sum128Spec extends SparkSpec {
   }
 
   test("dsum128 fails loudly when a value has more digits than scale") {
-    graft.GraftFunctions.register(spark)
     // 0.00005 has 5 true decimal digits; at scale 4 its product lands
     // exactly on the .5 rounding boundary where half-even rint and the
     // decimal cast's half-up diverge — the digit-precondition guard

@@ -71,7 +71,6 @@ class WktTextSpec extends SparkSpec {
       (Seq.fill(n)(d()), Seq.fill(n)(d()))
     }
     import spark.implicits._
-    graft.GraftFunctions.register(spark)
     val df = rows.toDF("xs", "ys")
     assertSame(df.select(
       call_function("wkt_line_text", col("xs"), col("ys")),
@@ -99,7 +98,6 @@ class WktTextSpec extends SparkSpec {
   }
 
   test("wkt_multi_text rejects non-double ring arrays at analysis") {
-    graft.GraftFunctions.register(spark)
     val xs = array(array(lit(1.0), lit(2.0)))
     val ints = array(array(lit(1), lit(2)))
     // both fields wrong, then only the second (the one never checked
@@ -115,7 +113,6 @@ class WktTextSpec extends SparkSpec {
   }
 
   test("kernels match the cast chains on the Derive geometries") {
-    graft.GraftFunctions.register(spark)
     import graft.geo.Derive
     val tri = Derive.triangles(spark, sfDir)
     assertSame(tri.select(

@@ -9,7 +9,6 @@ class RasterizeSpec extends SparkSpec {
 
   test("gridCover: hand-checked right triangle") {
     import spark.implicits._
-    graft.GraftFunctions.register(spark)
     // (0,0)-(110,0)-(0,110): G=50 centers (25,25) (75,25) (25,75) are
     // inside (x+y<110); (75,75) is out; ix/iy range is bbox-derived 0..2
     val tri = Seq((1L, Seq(0.0, 110.0, 0.0), Seq(0.0, 0.0, 110.0)))
@@ -34,7 +33,6 @@ class RasterizeSpec extends SparkSpec {
   }
 
   test("geo_overlay: ratios are cell-count fractions in (0, 1]") {
-    graft.GraftFunctions.register(spark)
     val rows = GeoQueries.overlay(spark, sfDir).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

@@ -2,6 +2,7 @@ package graft.geo
 
 import graft.SparkSpec
 import org.apache.spark.SparkException
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** WKT ingest contract: bit-exact round-trips into the planar model,
@@ -82,11 +83,15 @@ class WktSpec extends SparkSpec {
         List(List(0.0, 0.0, 4.0), List(1.0, 1.0, 2.0))),
       (2, List(List(10.0, 14.0, 10.0)),
         List(List(10.0, 10.0, 14.0)))))
-    // egress round-trip through toWktMultiPolygon
-    val rebuilt = Wkt.multiPolygons(m.select(col("m_id"),
-      Wkt.toWktMultiPolygon(Wkt.parseMultiPolygon(col("wkt"))).as("wkt")),
-      "wkt").select("m_id", "part_idx", "rxs", "rys")
+    // egress round-trip through toWktMultiPolygon, parts in part_idx order
     val direct = Wkt.multiPolygons(m, "wkt")
+      .select("m_id", "part_idx", "rxs", "rys")
+    val text = direct.groupBy("m_id")
+      .agg(sort_array(collect_list(
+        struct(col("part_idx"), col("rxs"), col("rys")))).as("ps"))
+      .select(col("m_id"), Wkt.toWktMultiPolygon(transform(col("ps"),
+        p => struct(p("rxs").as("rxs"), p("rys").as("rys")))).as("wkt"))
+    val rebuilt = Wkt.multiPolygons(text, "wkt")
       .select("m_id", "part_idx", "rxs", "rys")
     assert(rebuilt.except(direct).isEmpty && direct.except(rebuilt).isEmpty)
   }
@@ -157,49 +162,74 @@ class WktSpec extends SparkSpec {
       .contains("unsupported WKT geometry"))
   }
 
-  test("malformed WKT fails loudly with the offending text") {
-    def boom(wkt: String, parse: org.apache.spark.sql.Column): String = {
-      val e = intercept[Exception] {
-        Seq(wkt).toDF("wkt").select(parse).collect()
-      }
-      // unwrap SparkException chains to the raise_error message
-      Iterator.iterate(e.asInstanceOf[Throwable])(_.getCause)
-        .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+  private type Ingest = (DataFrame, String) => DataFrame
+
+  /** Runs `ingest` over a one-row `wkt` column; returns every message
+    * of the raised SparkException chain. */
+  private def boom(wkt: String, ingest: Ingest): String = {
+    val e = intercept[Exception] {
+      ingest(Seq(wkt).toDF("wkt"), "wkt").collect()
     }
-    assert(boom("POINT (1 2 3)", Wkt.parsePoint(col("wkt")))
-      .contains("malformed WKT POINT"))
-    assert(boom("LINESTRING (0 0, 1 1)", Wkt.parsePoint(col("wkt")))
-      .contains("malformed WKT POINT"))
+    Iterator.iterate(e.asInstanceOf[Throwable])(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+  }
+
+  test("malformed WKT fails loudly with the offending text") {
+    val points: Ingest = Wkt.points(_, _)
+    val polygons: Ingest = Wkt.polygons(_, _)
+    val lines: Ingest = Wkt.lines(_, _)
+    val rings: Ingest = Wkt.polygonsRings(_, _)
+    val multi: Ingest = Wkt.multiPolygons(_, _)
+    assert(boom("POINT (1 2 3)", points)
+      .contains("malformed WKT POINT vertex (two WKT numbers 'x y')"))
+    assert(boom("LINESTRING (0 0, 1 1)", points)
+      .contains("malformed WKT POINT: LINESTRING (0 0, 1 1)"))
     // unclosed ring (4 points so the size guard passes first)
-    assert(boom("POLYGON ((0 0, 1 0, 1 1, 0 1))", Wkt.parsePolygon(col("wkt")))
-      .contains("ring not closed"))
+    assert(boom("POLYGON ((0 0, 1 0, 1 1, 0 1))", polygons)
+      .contains("malformed WKT POLYGON (ring not closed)"))
     // 3 points can never close a ring — caught by the size guard
-    assert(boom("POLYGON ((0 0, 1 0, 0 1))", Wkt.parsePolygon(col("wkt")))
-      .contains("malformed WKT POLYGON"))
+    assert(boom("POLYGON ((0 0, 1 0, 0 1))", polygons)
+      .contains("malformed WKT POLYGON ring (>= 4 points"))
     // interior ring (hole) — unsupported, must not be silently dropped
     assert(boom("POLYGON ((0 0, 4 0, 0 4, 0 0), (1 1, 2 1, 1 2, 1 1))",
-      Wkt.parsePolygon(col("wkt"))).contains("malformed WKT POLYGON"))
-    assert(boom("POLYGON ((0 0, 1 junk, 0 0))", Wkt.parsePolygon(col("wkt")))
-      .contains("malformed WKT POLYGON"))
+      polygons).contains("malformed WKT POLYGON (single exterior ring"))
+    assert(boom("POLYGON ((0 0, 1 junk, 0 0))", polygons)
+      .contains("malformed WKT POLYGON ring vertex (two WKT numbers"))
     // LINESTRING: single point, junk token, wrong geometry, bad parens
-    assert(boom("LINESTRING (1 2)", Wkt.parseLineString(col("wkt")))
-      .contains("malformed WKT LINESTRING"))
-    assert(boom("LINESTRING (0 0, 1 junk)", Wkt.parseLineString(col("wkt")))
-      .contains("malformed WKT LINESTRING"))
-    assert(boom("POINT (1 2)", Wkt.parseLineString(col("wkt")))
-      .contains("malformed WKT LINESTRING"))
-    assert(boom("LINESTRING ((0 0, 1 1))", Wkt.parseLineString(col("wkt")))
-      .contains("malformed WKT LINESTRING"))
-    // ring-set parser: unclosed hole, junk between rings, unbalanced
-    assert(boom("POLYGON ((0 0, 4 0, 0 4, 0 0), (1 1, 2 1, 1 2))",
-      Wkt.parsePolygonRings(col("wkt"))).contains("malformed WKT POLYGON"))
-    assert(boom("POLYGON ((0 0, 4 0, 0 4, 0 0), junk)",
-      Wkt.parsePolygonRings(col("wkt"))).contains("malformed WKT POLYGON"))
-    assert(boom("POLYGON ((0 0, 4 0, 0 4, 0 0)",
-      Wkt.parsePolygonRings(col("wkt"))).contains("malformed WKT POLYGON"))
-    assert(boom("MULTIPOLYGON ((0 0, 1 0, 0 1, 0 0))",
-      Wkt.parseMultiPolygon(col("wkt"))).contains("malformed WKT"))
-    assert(boom("MULTIPOLYGON (((0 0, 1 0, 0 1, 0 0)), ((1 junk)))",
-      Wkt.parseMultiPolygon(col("wkt"))).contains("malformed WKT"))
+    assert(boom("LINESTRING (1 2)", lines)
+      .contains("malformed WKT LINESTRING (>= 2 points)"))
+    assert(boom("LINESTRING (0 0, 1 junk)", lines)
+      .contains("malformed WKT LINESTRING vertex (two WKT numbers"))
+    assert(boom("POINT (1 2)", lines)
+      .contains("malformed WKT LINESTRING (>= 2 points): POINT (1 2)"))
+    assert(boom("LINESTRING ((0 0, 1 1))", lines)
+      .contains("malformed WKT LINESTRING (>= 2 points)"))
+    // ring sets: too-short hole, junk between rings, unbalanced
+    assert(boom("POLYGON ((0 0, 4 0, 0 4, 0 0), (1 1, 2 1, 1 2))", rings)
+      .contains("malformed WKT POLYGON ring (>= 4 points"))
+    assert(boom("POLYGON ((0 0, 4 0, 0 4, 0 0), junk)", rings)
+      .contains("malformed WKT POLYGON ring list"))
+    assert(boom("POLYGON ((0 0, 4 0, 0 4, 0 0)", rings)
+      .contains("malformed WKT POLYGON ring list"))
+    assert(boom("MULTIPOLYGON ((0 0, 1 0, 0 1, 0 0))", multi)
+      .contains("malformed WKT MULTIPOLYGON ring list"))
+    assert(boom("MULTIPOLYGON (((0 0, 1 0, 0 1, 0 0)), ((1 junk)))", multi)
+      .contains("malformed WKT MULTIPOLYGON ring vertex (two WKT numbers"))
+    // the WKT number grammar: Double.parseDouble alone would take these
+    Seq("POINT (NaN 1)", "POINT (Infinity 1)", "POINT (0x1p3 1)",
+        "POINT (1d 2f)", "POINT (.5 1.)").foreach { w =>
+      assert(boom(w, points)
+        .contains(s"malformed WKT POINT vertex (two WKT numbers 'x y'): $w"))
+      assert(boom(w, Wkt.geometries(_, _))
+        .contains(s"malformed WKT POINT vertex (two WKT numbers 'x y'): $w"))
+    }
+    assert(boom("POLYGON ((0 0, 4d 0, 0 4, 0 0))", polygons)
+      .contains("malformed WKT POLYGON ring vertex (two WKT numbers"))
+  }
+
+  test("signed and exponent coordinates follow the WKT number grammar") {
+    val got = Wkt.points(Seq("POINT (+1e3 -2.5E-3)").toDF("wkt"), "wkt")
+      .select("x", "y").as[(Double, Double)].collect().toSeq
+    assert(got == Seq((1000.0, -0.0025)))
   }
 }

@@ -7,7 +7,6 @@ class KcenterSpec extends SparkSpec {
   import spark.implicits._
 
   test("farthest-first picks the known order on crafted geometry") {
-    graft.GraftFunctions.register(spark)
     // points on a line (padded to 2 dims): 0, 100, 10, 55, 99.
     // seed = vec_id 0 (at 0). Farthest from {0} is 100 (id 1,
     // d²=10000). Farthest from {0,100} is 55 (id 3, min d² = 2025).

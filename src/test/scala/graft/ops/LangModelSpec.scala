@@ -5,7 +5,6 @@ import graft.SparkSpec
 class LangModelSpec extends SparkSpec {
 
   test("char_ngrams is identical to the substring HOF chain") {
-    graft.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val both = graft.Tables.load(spark, sfDir, "documents")
       .limit(200)

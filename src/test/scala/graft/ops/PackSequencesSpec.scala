@@ -41,7 +41,6 @@ class PackSequencesSpec extends SparkSpec {
         expr(s"""CAST(conv(substring(md5(concat('pack:',
           CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 8""")
           .as("bucket"))
-    graft.GraftFunctions.register(spark)
     val per = d.groupBy("source", "bucket")
       .agg(call_function("ffd_bins",
           array_sort(collect_list(col("n_tok"))), lit(cap)).as("b"),

@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 class PqSpec extends SparkSpec {
 
   private def e = {
-    graft.GraftFunctions.register(spark)
     Tables.fanout(Tables.load(spark, sfDir, "embeddings"))
       .select(col("vec_id"), Vec.asDouble(col("embedding")).as("v"))
   }

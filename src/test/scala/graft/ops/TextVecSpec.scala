@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 class TextVecSpec extends SparkSpec {
 
   test("word_ngrams is bit-identical to the Text.grams HOF chain") {
-    graft.GraftFunctions.register(spark)
     import spark.implicits._
     // multiplicity preserved, first-space token boundaries, short-doc
     // empty array, multi-space empty tokens — all must match the
@@ -31,7 +30,6 @@ class TextVecSpec extends SparkSpec {
   }
 
   test("shingle_hashes is bit-identical to the HOF gram-hash chain") {
-    graft.GraftFunctions.register(spark)
     // the native kernel must reproduce the distinct xxhash64 gram-hash
     // SET, SORTED ascending (the round-17 contract: sorted output lets
     // candidate verification run the zero-allocation sorted_common
@@ -202,7 +200,6 @@ class TextVecSpec extends SparkSpec {
   }
 
   test("native minhash_signature is bit-identical to the aggregated form") {
-    graft.GraftFunctions.register(spark)
     val d = graft.Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
         array_distinct(transform(Text.grams(3), g => xxhash64(g))).as("harr"))
