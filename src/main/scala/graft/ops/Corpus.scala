@@ -34,21 +34,11 @@ object Corpus {
     * `budget` tokens — shard = floor(tokens-before-this-doc / budget).
     * The window is per-source, so at 100 TB each source partitions
     * independently (one narrow shuffle on source); no global sort.
-    * Emits per-shard document counts and token sums. */
+    * Emits per-shard document counts and token sums — the
+    * CorpusPipeline.packShards step and its shardStats rollup. */
   def packShards(s: SparkSession, dir: String,
-                 budget: Int = 2000): DataFrame = {
-    val w = Window.partitionBy("source").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    docs(s, dir)
-      .select(col("source"), col("doc_id"), size(toks).as("n_tok"))
-      .withColumn("cum", sum(col("n_tok")).over(w))
-      .withColumn("shard",
-        floor((col("cum") - col("n_tok")) / lit(budget.toDouble))
-          .cast("bigint"))
-      .groupBy("source", "shard")
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("tok_sum"))
-      .orderBy("source", "shard")
-  }
+                 budget: Int = 2000): DataFrame =
+    graft.api.CorpusPipeline(docs(s, dir)).packShards(budget).shardStats
 
   val packShardsSql: String = """
     WITH t AS (
@@ -69,14 +59,24 @@ object Corpus {
     * downsampled to ~16% (0x29/0x100), everything else to 50%. The
     * decision is a pure function of the row (identical on DuckDB, on
     * rerun, at any cluster size); no RNG, no seed plumbing. */
-  def sampleStratified(s: SparkSession, dir: String): DataFrame = {
-    val kept = substring(md5(col("text")), 1, 2) <
-      when(col("lang") === "en", "29").otherwise("80")
+  def sampleStratified(s: SparkSession, dir: String): DataFrame =
     docs(s, dir)
       .groupBy("lang")
       .agg(count(lit(1)).as("n_total"),
-        sum(when(kept, 1L).otherwise(0L)).as("n_kept"))
+        sum(when(stratifiedKeep(Map("en" -> "29"), "80"), 1L).otherwise(0L))
+          .as("n_kept"))
       .orderBy("lang")
+
+  /** The stratified keep predicate (sample_stratified and the
+    * CorpusPipeline.sampleStratified step): the first two hex digits
+    * of md5(text) fall below the row's language threshold — `rates`
+    * per language, `default` for the rest. */
+  private[graft] def stratifiedKeep(rates: Map[String, String],
+                                    default: String): Column = {
+    val thr = rates.foldLeft(lit(default)) { case (acc, (lang, hex)) =>
+      when(col("lang") === lang, hex).otherwise(acc)
+    }
+    substring(md5(col("text")), 1, 2) < thr
   }
 
   val sampleStratifiedSql: String = """
@@ -260,25 +260,31 @@ object Corpus {
   val EpochCap = 4.0
 
   def corpusEpochs(s: SparkSession, dir: String): DataFrame = {
-    val q = docs(s, dir)
-      .groupBy("source").agg(sum(col("n_tok")).as("n_tok"))
-      .withColumn("wq",
-        floor(sqrt(col("n_tok").cast("double")) * lit(1e6) + lit(0.5))
-          .cast("long"))
-    val t = q.agg((sum(col("n_tok")) * 2L).as("budget"),
-      sum(col("wq")).as("sumwq"))
     val ideal =
       col("budget").cast("double") * col("wq") / col("sumwq")
-    q.crossJoin(broadcast(t))
-      .select(col("source"), col("n_tok"),
+    epochWeights(docs(s, dir), col("n_tok"))
+      .select(col("source"), col("src_tok").as("n_tok"),
         round(col("wq").cast("double") / col("sumwq"), 6).as("share"),
-        round(least(lit(EpochCap), ideal / col("n_tok")), 6)
+        round(least(lit(EpochCap), ideal / col("src_tok")), 6)
           .as("epochs"),
-        floor(least(lit(EpochCap) * col("n_tok"), ideal)).cast("long")
+        floor(least(lit(EpochCap) * col("src_tok"), ideal)).cast("long")
           .as("toks_alloc"),
-        when(ideal / col("n_tok") > EpochCap, 1L).otherwise(0L)
+        when(ideal / col("src_tok") > EpochCap, 1L).otherwise(0L)
           .as("capped"))
       .orderBy("source")
+  }
+
+  /** Per-source token totals `src_tok` (of `nTok`) and integer √n
+    * weights `wq`, crossed with the run totals `budget` (2× corpus
+    * tokens) and `sumwq` — the schedule corpus_epochs reports and
+    * [[mixtureInstances]] replicates by. */
+  private def epochWeights(d: DataFrame, nTok: Column): DataFrame = {
+    val q = d.groupBy("source").agg(sum(nTok).as("src_tok"))
+      .withColumn("wq",
+        floor(sqrt(col("src_tok").cast("double")) * lit(1e6) + lit(0.5))
+          .cast("long"))
+    q.crossJoin(broadcast(q.agg((sum(col("src_tok")) * 2L).as("budget"),
+      sum(col("wq")).as("sumwq"))))
   }
 
   val corpusEpochsSql: String = """
@@ -323,8 +329,8 @@ object Corpus {
     *     60-bit keep hash falls under floor(frac(e_s)·2⁶⁰) — the
     *     sample_temperature integer-threshold idiom, so the expected
     *     token mass per source IS the scheduled allocation;
-    *   - every instance (doc, rep) gets a position hash h32; the run
-    *     order is (slice, h32) with slice = h32 / 2²⁶ — 64 equal
+    *   - every instance (doc, rep) gets a 32-bit position hash mix_h;
+    *     the run order is (slice, mix_h), slice = mix_h / 2²⁶ — 64 equal
     *     timeline slices of the training run. Uniform hashes ⇒ every
     *     source's instances spread uniformly across slices.
     *
@@ -336,56 +342,67 @@ object Corpus {
     * Scale shape: one ≤4× map-side explode, one broadcast of the
     * ≤|sources| schedule, ONE map-side-combined hash aggregate to
     * slices·|sources| rows. No window, no global sort — at 100 TB the
-    * physical write is partitionBy(slice) + sortWithinPartitions(h32),
+    * physical write is partitionBy(slice) + sortWithinPartitions(mix_h),
     * embarrassingly parallel. */
-  def packMixture(s: SparkSession, dir: String, slices: Int = 64): DataFrame = {
-    val d = docs(s, dir)
-    val q = d.groupBy("source").agg(sum(col("n_tok")).as("src_tok"))
-      .withColumn("wq",
-        floor(sqrt(col("src_tok").cast("double")) * lit(1e6) + lit(0.5))
-          .cast("long"))
-    val t = q.agg((sum(col("src_tok")) * 2L).as("budget"),
-      sum(col("wq")).as("sumwq"))
+  def packMixture(s: SparkSession, dir: String, slices: Int = 64): DataFrame =
+    mixtureAudit(mixtureInstances(docs(s, dir), col("n_tok"), slices),
+      col("n_tok"))
+
+  /** The pack_mixture instance core (also the CorpusPipeline.packMixture
+    * step): every row of `d` replicated by its source's scheduled epoch
+    * count, each instance carrying (rep, mix_h, slice); `nTok` is the
+    * row's token count, which weights the schedule. */
+  private[graft] def mixtureInstances(d: DataFrame, nTok: Column,
+                                      slices: Int): DataFrame = {
     // the corpus_epochs ratio, unrounded — one mult/div chain mirrored
     // operation-for-operation in the oracle (identical IEEE doubles)
     val e = least(lit(EpochCap),
       col("budget").cast("double") * col("wq") / col("sumwq")
         / col("src_tok"))
-    val sched = q.crossJoin(broadcast(t))
-      .select(col("source"), floor(e).cast("long").as("full_e"),
+    val sched = epochWeights(d, nTok)
+      .select(col("source"), floor(e).cast("long").as("_full_e"),
         floor((e - floor(e)) * lit(1152921504606846976L).cast("double"))
-          .cast("long").as("thr"))
+          .cast("long").as("_thr"))
     val h60 = expr("""CAST(conv(substring(md5(concat('mixk:',
       CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT)""")
-    val inst = d.select(col("source"), col("doc_id"), col("n_tok"))
-      .join(broadcast(sched), "source")
-      .withColumn("reps",
-        col("full_e") + when(h60 < col("thr"), 1L).otherwise(0L))
-      // Spark sequence(0, n) DESCENDS for n < 0 — zero-rep docs must
-      // leave through the filter, never reach the sequence
-      .where(col("reps") >= 1L)
-      .select(col("source"), col("doc_id"), col("n_tok"),
-        explode(sequence(lit(0L), col("reps") - 1L)).as("rep"))
     val h32 = expr("""CAST(conv(substring(md5(concat('mix:',
       CAST(doc_id AS STRING), '#', CAST(rep AS STRING))), 1, 8),
       16, 10) AS BIGINT)""")
-    inst
-      .select(col("source"), col("n_tok"), h32.as("h32"))
-      // h32/2^26 is an exact dyadic double — floor identical both
-      // engines; h_sum through the 128-bit accumulator (u32 terms are
-      // exact 0-digit doubles well inside the 2^51 envelope)
-      .groupBy(floor(col("h32") / lit(4294967296.0 / slices))
-        .cast("long").as("slice"), col("source"))
-      .agg(count(lit(1)).as("n_inst"), sum(col("n_tok")).as("tok_sum"),
-        QueryDef.dsum(col("h32"), 0).as("h_sum"))
-      .orderBy("slice", "source")
+    d.join(broadcast(sched), "source")
+      .withColumn("_reps",
+        col("_full_e") + when(h60 < col("_thr"), 1L).otherwise(0L))
+      // Spark sequence(0, n) DESCENDS for n < 0 — zero-rep docs must
+      // leave through the filter, never reach the sequence
+      .where(col("_reps") >= 1L)
+      .withColumn("rep", explode(sequence(lit(0L), col("_reps") - 1L)))
+      .withColumn("mix_h", h32)
+      // mix_h/2^26 is an exact dyadic double — floor identical both
+      // engines
+      .withColumn("slice",
+        floor(col("mix_h") / lit(4294967296.0 / slices)).cast("long"))
+      .drop("_full_e", "_thr", "_reps")
   }
 
-  val packMixtureSql: String = """
-    WITH c AS (
+  /** The pack_mixture audit over [[mixtureInstances]]: per (slice,
+    * source) instance count, token mass and the order-free content
+    * hash sum (u32 terms are exact 0-digit doubles, well inside the
+    * dsum128 envelope). */
+  private[graft] def mixtureAudit(inst: DataFrame, nTok: Column): DataFrame =
+    inst.groupBy("slice", "source")
+      .agg(count(lit(1)).as("n_inst"), sum(nTok).as("tok_sum"),
+        QueryDef.dsum(col("mix_h"), 0).as("h_sum"))
+      .orderBy("slice", "source")
+
+  val packMixtureSql: String = s"""
+    WITH ${mixtureSql("documents")}"""
+
+  /** Oracle of [[mixtureInstances]] + [[mixtureAudit]] over the
+    * (source, doc_id, text) CTE `from` — pack_mixture's and
+    * corpus_pipeline_v4's. */
+  private def mixtureSql(from: String): String = s"""c AS (
       SELECT source, doc_id,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-      FROM documents),
+      FROM $from),
     q AS (
       SELECT source, CAST(SUM(n_tok) AS BIGINT) AS src_tok,
              CAST(floor(sqrt(CAST(SUM(n_tok) AS DOUBLE)) * 1000000.0
@@ -615,50 +632,41 @@ object Corpus {
   private def benchWindows(s: SparkSession, dir: String,
                            w: Int): DataFrame =
     graft.Artifacts.frozen(s, ("corpus.benchWindows", dir, w)) {
-      graft.Artifacts.pin(
-        substringWindows(docs(s, dir).filter(col("doc_id") % 31 === 0), w)
-          .select("h1", "h2").distinct())
+      graft.Artifacts.pin(benchWindowSet(
+        docs(s, dir).filter(col("doc_id") % 31 === 0), w))
     }
 
-  /** Substring-grain benchmark decontamination — the span-removal
-    * standard (GPT-3 appendix C / Lee et al. 2021 applied to the
-    * test-leak screen) that [[textDecontam]]'s 5-gram FLAG
-    * under-serves: instead of discarding a whole document for one
-    * shared 5-gram, remove exactly the tokens covered by a ≥ w-token
-    * verbatim overlap with the benchmark set and keep the rest. Every
-    * w-token window of every corpus document is keyed at stride 1
-    * (any shared run of ≥ w tokens is caught at every alignment);
-    * a token is contaminated iff ANY matching window covers it
-    * (overlapping hits merge into spans via the running-max
-    * coverage); documents rebuild from surviving tokens, certified
-    * byte-exact by md5 against the oracle's string-content replay.
-    * Benchmark = the deterministic held-out slice (doc_id % 31 = 0),
-    * the same split textDecontam screens — the two operators are the
-    * flag/surgery pair over one scenario.
-    *
-    * Scale shape: the `rolling_hash_windows` native expression rolls
-    * two independent 64-bit polynomial hashes per window — O(n) per
-    * document, no w× window-string materialization (dedup_substrings
-    * Scaladoc). The benchmark index is a session-frozen BROADCAST set
-    * (benchmarks are small by nature), so the corpus window stream
-    * pays a map-side semi-join and NEVER shuffles — unlike
-    * dedup_substrings there is no global first-occurrence aggregate;
-    * the only full-data exchange is the per-doc coverage window, and
-    * hit rows (the only join output) are bounded by the true
-    * contamination volume. */
-  /** Shared span-surgery report: per-document (n_tok, covered-token
-    * count, rebuilt md5) from a (doc_id, pos) table of w-token hit
-    * windows. Hit START positions fold to one sorted array per
-    * document — the ONLY shuffled rows are the hits themselves
-    * (bounded by the true duplication/contamination volume), and
-    * coverage merge + rebuild then run PER DOCUMENT as two O(n + h)
-    * folds over (toks, starts): the cdc_chunks rule (work that never
-    * leaves its document never leaves its row) — no token explode, no
-    * per-token join, no coverage window, zero full-data exchange. */
+  /** A benchmark frame's distinct (h1, h2) w-token window set. */
+  private[graft] def benchWindowSet(bench: DataFrame, w: Int): DataFrame =
+    substringWindows(bench, w).select("h1", "h2").distinct()
+
+  /** The (doc_id, pos) of every corpus window whose content is in the
+    * benchmark window set — a map-side semi-join against the broadcast
+    * set, so the corpus window stream never shuffles. */
+  private[graft] def decontamHits(benchWins: DataFrame, corpusDf: DataFrame,
+                                  w: Int): DataFrame =
+    substringWindows(corpusDf, w)
+      .join(broadcast(benchWins), Seq("h1", "h2"))
+      .select(col("doc_id"), col("pos"))
+
+  /** Span surgery, hit-gathering half: `corpusDf` left-joined with each
+    * document's SORTED w-token hit start positions (`starts`, null for
+    * a hit-free doc). The ONLY shuffled rows are the hits themselves
+    * (bounded by the true duplication/contamination volume); coverage
+    * merge and rebuild then run PER DOCUMENT as O(n + h) folds over
+    * (tokens, starts) — the cdc_chunks rule (work that never leaves
+    * its document never leaves its row): no token explode, no
+    * per-token join, no coverage window. Two projections read it:
+    * [[spanFoldReport]] and [[spanExcise]]. */
+  private def spanStarts(corpusDf: DataFrame, hits: DataFrame): DataFrame =
+    corpusDf.join(hits.groupBy("doc_id")
+      .agg(sort_array(collect_list(col("pos"))).as("starts")),
+      Seq("doc_id"), "left")
+
+  /** Span-surgery report projection: per-document (n_tok, covered-token
+    * count `cntName`, rebuilt md5). */
   private[graft] def spanFoldReport(corpusDf: DataFrame, hits: DataFrame,
                                     w: Int, cntName: String): DataFrame = {
-    val hitsByDoc = hits.groupBy("doc_id")
-      .agg(sort_array(collect_list(col("pos"))).as("starts"))
     // bind the token array to a MATERIALIZED column when the caller
     // carries one (docToks does): the fold lambdas are interpreted,
     // and an inline split(text) expression would re-split per lambda
@@ -673,7 +681,7 @@ object Corpus {
     val n = size(tk)
     // clean docs (the overwhelming majority) take the lazy CASE fast
     // path: split+rejoin is byte-faithful, so rebuilt_md5 = md5(text)
-    base.join(hitsByDoc, Seq("doc_id"), "left")
+    spanStarts(base, hits)
       .select(col("doc_id"), n.cast("bigint").as("n_tok"),
         when(col("starts").isNull, lit(0L))
           .otherwise(coveredCount(col("starts"), n, w).cast("bigint"))
@@ -682,6 +690,22 @@ object Corpus {
           .otherwise(md5(rebuiltString(col("starts"), tk, n, w)))
           .as("rebuilt_md5"))
       .orderBy("doc_id")
+  }
+
+  /** Span-surgery chain-step projection (CorpusPipeline.dedupSubstrings
+    * and decontamSpan): `text` rebuilt with every hit-covered token
+    * excised, every other column kept. The stale `toks`/`n_tok` of a
+    * docToks frame are dropped, and the fold's token array is bound
+    * from the CURRENT text as its own column (split only for docs
+    * with hits), never inlined into the lambdas. */
+  private[graft] def spanExcise(corpusDf: DataFrame, hits: DataFrame,
+                                w: Int): DataFrame = {
+    val tk = col("_toks")
+    spanStarts(corpusDf.drop("toks", "n_tok"), hits)
+      .withColumn("_toks", when(col("starts").isNotNull, toks))
+      .withColumn("text", when(col("starts").isNull, col("text"))
+        .otherwise(rebuiltString(col("starts"), tk, size(tk), w)))
+      .drop("_toks", "starts")
   }
 
   /** Coverage-merge fold: how many tokens of an n-token doc are
@@ -730,26 +754,60 @@ object Corpus {
 
   private[graft] def decontamSpanCore(benchWins: DataFrame,
                                       corpusDf: DataFrame,
-                                      w: Int): DataFrame = {
-    val hits = substringWindows(corpusDf, w)
-      .join(broadcast(benchWins), Seq("h1", "h2"))
-      .select(col("doc_id"), col("pos"))
-    spanFoldReport(corpusDf, hits, w, "n_contam")
-  }
+                                      w: Int): DataFrame =
+    spanFoldReport(corpusDf, decontamHits(benchWins, corpusDf, w), w,
+      "n_contam")
 
+  /** Substring-grain benchmark decontamination — the span-removal
+    * standard (GPT-3 appendix C / Lee et al. 2021 applied to the
+    * test-leak screen) that [[textDecontam]]'s 5-gram FLAG
+    * under-serves: instead of discarding a whole document for one
+    * shared 5-gram, remove exactly the tokens covered by a ≥ w-token
+    * verbatim overlap with the benchmark set and keep the rest. Every
+    * w-token window of every corpus document is keyed at stride 1
+    * (any shared run of ≥ w tokens is caught at every alignment);
+    * a token is contaminated iff ANY matching window covers it
+    * (overlapping hits merge into spans via the fold's running max
+    * covered end); documents rebuild from surviving tokens, certified
+    * byte-exact by md5 against the oracle's string-content replay.
+    * Benchmark = the deterministic held-out slice (doc_id % 31 = 0),
+    * the same split textDecontam screens — the two operators are the
+    * flag/surgery pair over one scenario.
+    *
+    * Scale shape: the `rolling_hash_windows` native expression rolls
+    * two independent 64-bit polynomial hashes per window — O(n) per
+    * document, no w× window-string materialization (dedup_substrings
+    * Scaladoc). The benchmark index is a session-frozen BROADCAST set
+    * (benchmarks are small by nature), so the corpus window stream
+    * pays a map-side semi-join and NEVER shuffles — unlike
+    * dedup_substrings there is no global first-occurrence aggregate;
+    * the only full-data exchange is the corpus side of the per-doc
+    * fold join ([[spanStarts]]), and hit rows (the only join output)
+    * are bounded by the true contamination volume. */
   def textDecontamSpan(s: SparkSession, dir: String,
-                       w: Int = 25): DataFrame = {
+                       w: Int = 25): DataFrame =
     decontamSpanCore(benchWindows(s, dir, w),
       docs(s, dir).filter(col("doc_id") % 31 =!= 0), w)
-  }
 
-  val textDecontamSpanSql: String = """
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+  val textDecontamSpanSql: String = s"""
+    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),${decontamCoverSql("toks")}
+    SELECT doc_id, COUNT(*) AS n_tok,
+           CAST(SUM(CASE WHEN cov IS NOT NULL AND cov >= pos
+                    THEN 1 ELSE 0 END) AS BIGINT) AS n_contam,
+           COALESCE(md5(string_agg(
+             CASE WHEN cov IS NULL OR cov < pos THEN tk END, ' '
+             ORDER BY pos)), md5('')) AS rebuilt_md5
+    FROM cv GROUP BY doc_id ORDER BY doc_id"""
+
+  /** Oracle of [[decontamHits]] (benchmark = doc_id % 31 = 0) +
+    * per-token coverage over the (doc_id, t) CTE `toks`: CTEs w, b,
+    * hits, tok, cv — text_decontam_span's and corpus_pipeline_v4's. */
+  private def decontamCoverSql(toks: String): String = s"""
     w AS (
       SELECT doc_id, pos, array_to_string(t[pos + 1 : pos + 25], ' ') AS c
       FROM (SELECT doc_id, t,
               unnest(generate_series(0, len(t) - 25)) AS pos
-            FROM toks)),
+            FROM $toks)),
     b AS (SELECT DISTINCT c FROM w WHERE doc_id % 31 = 0),
     hits AS (
       SELECT w.doc_id, w.pos, w.pos + 24 AS cend
@@ -758,21 +816,14 @@ object Corpus {
       SELECT doc_id, pos, t[pos + 1] AS tk
       FROM (SELECT doc_id, t,
               unnest(generate_series(0, len(t) - 1)) AS pos
-            FROM toks)
+            FROM $toks)
       WHERE doc_id % 31 <> 0),
     cv AS (
       SELECT tok.doc_id, tok.pos, tok.tk,
              MAX(h.cend) OVER (PARTITION BY tok.doc_id ORDER BY tok.pos
                                ROWS UNBOUNDED PRECEDING) AS cov
       FROM tok LEFT JOIN hits h
-        ON tok.doc_id = h.doc_id AND tok.pos = h.pos)
-    SELECT doc_id, COUNT(*) AS n_tok,
-           CAST(SUM(CASE WHEN cov IS NOT NULL AND cov >= pos
-                    THEN 1 ELSE 0 END) AS BIGINT) AS n_contam,
-           COALESCE(md5(string_agg(
-             CASE WHEN cov IS NULL OR cov < pos THEN tk END, ' '
-             ORDER BY pos)), md5('')) AS rebuilt_md5
-    FROM cv GROUP BY doc_id ORDER BY doc_id"""
+        ON tok.doc_id = h.doc_id AND tok.pos = h.pos)"""
 
   /** Per-document repetition signals (the Gopher-style quality
     * filters: repetitious documents are low-value training data):
@@ -1031,18 +1082,12 @@ object Corpus {
     * individual signal operators document. */
   def corpusQualityFilter(s: SparkSession, dir: String): DataFrame = {
     docs(s, dir)
-      .select(col("source"),
-        size(toks).as("n_tok"),
-        (size(array_distinct(toks)).cast("double") / size(toks))
-          .as("dr"),
+      .select(col("source"), qualityGate().as("gate"),
         call_function("bigram_run_stats", toks).as("f"))
-      .select(col("source"), col("n_tok"), col("dr"),
-        when(col("f.ng") > 0,
-          col("f.mx").cast("double") / col("f.ng")).otherwise(0.0)
-          .as("tg"))
       .select(col("source"),
-        (col("n_tok") >= 20 && col("n_tok") <= 100000 &&
-          col("dr") >= 0.1 && col("tg") <= 0.2).as("keep"))
+        (col("gate") && (when(col("f.ng") > 0,
+          col("f.mx").cast("double") / col("f.ng")).otherwise(0.0) <= 0.2))
+          .as("keep"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("keep"), 1L).otherwise(0L)).as("n_keep"))
@@ -1051,6 +1096,16 @@ object Corpus {
           .as("keep_rate"))
       .orderBy("source")
   }
+
+  /** The in-row quality gate: token-count band + distinct-token ratio.
+    * One definition for corpus_quality_filter, the
+    * CorpusPipeline.qualityFilter step and its streaming twin
+    * (StreamDedup.corpusAssemblyStream). */
+  private[graft] def qualityGate(minTok: Int = 20, maxTok: Int = 100000,
+                                 minDistinctRatio: Double = 0.1): Column =
+    size(toks) >= minTok && size(toks) <= maxTok &&
+      size(array_distinct(toks)).cast("double") / size(toks) >=
+        minDistinctRatio
 
   val corpusQualityFilterSql: String = """
     WITH t AS (
@@ -1091,21 +1146,28 @@ object Corpus {
       .packShards(2000)
       .shardStats
 
-  val pipelineE2eSql: String = """
-    WITH dedup AS (
-      SELECT * FROM documents
+  val pipelineE2eSql: String = s"""
+    WITH ${dedupSampledSql("documents")}${shardStatsSql("sampled")}"""
+
+  /** Oracle of dedupExact → sampleStratified over the CTE `from`:
+    * CTEs dedup, sampled. */
+  private def dedupSampledSql(from: String): String = s"""dedup AS (
+      SELECT * FROM $from
       QUALIFY row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) = 1),
     sampled AS (
       SELECT * FROM dedup
       WHERE substring(md5(text), 1, 2) <
-            (CASE WHEN lang = 'en' THEN '29' ELSE '80' END)),
+            (CASE WHEN lang = 'en' THEN '29' ELSE '80' END)),"""
+
+  /** Oracle of packShards(2000).shardStats over the CTE `from`. */
+  private def shardStatsSql(from: String): String = s"""
     packed AS (
       SELECT source, doc_id,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
              SUM(CAST(len(string_split(text, ' ')) AS BIGINT))
                OVER (PARTITION BY source ORDER BY doc_id
                      ROWS UNBOUNDED PRECEDING) AS cum
-      FROM sampled)
+      FROM $from)
     SELECT source, CAST(FLOOR((cum - n_tok) / 2000.0) AS BIGINT) AS shard,
            COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS tok_sum
     FROM packed GROUP BY 1, 2 ORDER BY source, shard"""
@@ -1121,30 +1183,14 @@ object Corpus {
       .packShards(2000)
       .shardStats
 
-  val pipelineFullSql: String = """
+  val pipelineFullSql: String = s"""
     WITH q AS (
       SELECT * FROM documents
       WHERE len(string_split(text, ' ')) >= 20
         AND len(string_split(text, ' ')) <= 100000
         AND CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
               / len(string_split(text, ' ')) >= 0.1),
-    dedup AS (
-      SELECT * FROM q
-      QUALIFY row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) = 1),
-    sampled AS (
-      SELECT * FROM dedup
-      WHERE substring(md5(text), 1, 2) <
-            (CASE WHEN lang = 'en' THEN '29' ELSE '80' END)),
-    packed AS (
-      SELECT source, doc_id,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-             SUM(CAST(len(string_split(text, ' ')) AS BIGINT))
-               OVER (PARTITION BY source ORDER BY doc_id
-                     ROWS UNBOUNDED PRECEDING) AS cum
-      FROM sampled)
-    SELECT source, CAST(FLOOR((cum - n_tok) / 2000.0) AS BIGINT) AS shard,
-           COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS tok_sum
-    FROM packed GROUP BY 1, 2 ORDER BY source, shard"""
+    ${dedupSampledSql("q")}${shardStatsSql("sampled")}"""
 
   /** The assembly chain with cross-corpus duplicate-BLOCK removal
     * fused in: qualityFilter → dedupParagraphs (documents REWRITTEN
@@ -1164,23 +1210,14 @@ object Corpus {
       .packShards(2000)
       .shardStats
 
-  val pipelineV2Sql: String = """
+  val pipelineV2Sql: String = s"""
     WITH q AS (
       SELECT * FROM documents
       WHERE len(string_split(text, ' ')) >= 20
         AND len(string_split(text, ' ')) <= 100000
         AND CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
               / len(string_split(text, ' ')) >= 0.1),
-    toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM q),
-    b AS (
-      SELECT doc_id, pos,
-             array_to_string(t[pos * 10 + 1 : pos * 10 + 10], ' ') AS blk
-      FROM (SELECT doc_id, t,
-              unnest(generate_series(0,
-                CAST(ceil(len(t) / 10.0) AS INT) - 1)) AS pos
-            FROM toks)),
-    canon AS (
-      SELECT blk, MIN(doc_id * 1048576 + pos) AS cp FROM b GROUP BY blk),
+    toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM q),$blockCanonSql,
     reb AS (
       SELECT b.doc_id, string_agg(b.blk, ' ' ORDER BY b.pos) AS text
       FROM b JOIN canon c ON b.blk = c.blk
@@ -1189,23 +1226,7 @@ object Corpus {
     rw AS (
       SELECT q.doc_id, reb.text, q.lang, q.source
       FROM q JOIN reb ON q.doc_id = reb.doc_id),
-    dedup AS (
-      SELECT * FROM rw
-      QUALIFY row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) = 1),
-    sampled AS (
-      SELECT * FROM dedup
-      WHERE substring(md5(text), 1, 2) <
-            (CASE WHEN lang = 'en' THEN '29' ELSE '80' END)),
-    packed AS (
-      SELECT source, doc_id,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-             SUM(CAST(len(string_split(text, ' ')) AS BIGINT))
-               OVER (PARTITION BY source ORDER BY doc_id
-                     ROWS UNBOUNDED PRECEDING) AS cum
-      FROM sampled)
-    SELECT source, CAST(FLOOR((cum - n_tok) / 2000.0) AS BIGINT) AS shard,
-           COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS tok_sum
-    FROM packed GROUP BY 1, 2 ORDER BY source, shard"""
+    ${dedupSampledSql("rw")}${shardStatsSql("sampled")}"""
 
   /** The round-11 assembly chain — the fluent pipeline composing the
     * PUBLISHED gates end-to-end under the oracle: Gopher rules
@@ -1224,7 +1245,7 @@ object Corpus {
       .packShards(2000)
       .shardStats
 
-  val pipelineV3Sql: String = """
+  val pipelineV3Sql: String = s"""
     WITH d0 AS (
       SELECT *, string_split(text, ' ') AS t0,
         len(string_split(text, ' ')) AS dl,
@@ -1240,28 +1261,7 @@ object Corpus {
               x -> regexp_matches(x, '[A-Za-z]'))) < 4 * dl)
         AND NOT (10 * len(list_filter(t0,
               x -> x = '#' OR x = '...')) > dl)),
-    toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM g),
-    w AS (
-      SELECT doc_id, pos, array_to_string(t[pos + 1 : pos + 50], ' ') AS c
-      FROM (SELECT doc_id, t,
-              unnest(generate_series(0, len(t) - 50)) AS pos
-            FROM toks)),
-    canon AS (SELECT c, MIN(doc_id * 1048576 + pos) AS cp FROM w GROUP BY c),
-    removed AS (
-      SELECT w.doc_id, w.pos, w.pos + 49 AS cend
-      FROM w JOIN canon ON w.c = canon.c
-      WHERE w.doc_id * 1048576 + w.pos != canon.cp),
-    tok AS (
-      SELECT doc_id, pos, t[pos + 1] AS tk
-      FROM (SELECT doc_id, t,
-              unnest(generate_series(0, len(t) - 1)) AS pos
-            FROM toks)),
-    cv AS (
-      SELECT tok.doc_id, tok.pos, tok.tk,
-             MAX(r.cend) OVER (PARTITION BY tok.doc_id ORDER BY tok.pos
-                               ROWS UNBOUNDED PRECEDING) AS cov
-      FROM tok LEFT JOIN removed r
-        ON tok.doc_id = r.doc_id AND tok.pos = r.pos),
+    toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM g),$substringCoverSql,
     reb AS (
       SELECT doc_id,
         COALESCE(string_agg(
@@ -1273,67 +1273,29 @@ object Corpus {
       FROM g JOIN reb ON g.doc_id = reb.doc_id),
     dedup AS (
       SELECT * FROM rw
-      QUALIFY row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) = 1),
-    packed AS (
-      SELECT source, doc_id,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-             SUM(CAST(len(string_split(text, ' ')) AS BIGINT))
-               OVER (PARTITION BY source ORDER BY doc_id
-                     ROWS UNBOUNDED PRECEDING) AS cum
-      FROM dedup)
-    SELECT source, CAST(FLOOR((cum - n_tok) / 2000.0) AS BIGINT) AS shard,
-           COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS tok_sum
-    FROM packed GROUP BY 1, 2 ORDER BY source, shard"""
+      QUALIFY row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) = 1),${shardStatsSql("dedup")}"""
 
   /** The round-16 RELEASE chain (corpus_pipeline_v4): screen the
-    * corpus against the benchmark (span surgery — text_decontam_span's
-    * certified step), drop exact duplicates of the CLEANED text (a
-    * contaminated doc and its clean twin collapse after surgery —
-    * order matters, and this order is the one a release runs), then
-    * materialize the mixture schedule and report the per-(slice,
-    * source) audit. Three certified operators composed end-to-end
-    * under one oracle replay; every stage shape is the one its
-    * standalone op certifies (broadcast benchmark index, md5-argmin
-    * keeper, md5 instance placement). */
+    * corpus against the benchmark (span surgery), drop exact
+    * duplicates of the CLEANED text (a contaminated doc and its clean
+    * twin collapse after surgery — order matters, and this order is
+    * the one a release runs), then materialize the mixture schedule
+    * and report the per-(slice, source) audit. Each step runs the
+    * same core as its certified standalone op — decontamHits + the
+    * span fold (text_decontam_span), mixtureInstances + mixtureAudit
+    * (pack_mixture) — composed end-to-end under one oracle replay. */
   def pipelineV4(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
-    val bench = d.filter(col("doc_id") % 31 === 0)
-    val corpus = d.filter(col("doc_id") % 31 =!= 0)
-    val cleaned = graft.api.CorpusPipeline(corpus)
-      .decontamSpan(bench, 25)
+    val cleaned = graft.api.CorpusPipeline(d.filter(col("doc_id") % 31 =!= 0))
+      .decontamSpan(d.filter(col("doc_id") % 31 === 0), 25)
       .dedupExact
-    val nTok = size(split(col("text"), " ")).cast("long")
-    cleaned.packMixture(64).df
-      .groupBy("slice", "source")
-      .agg(count(lit(1)).as("n_inst"), sum(nTok).as("tok_sum"),
-        QueryDef.dsum(col("mix_h"), 0).as("h_sum"))
-      .orderBy("slice", "source")
+    mixtureAudit(cleaned.packMixture(64).df,
+      size(split(col("text"), " ")).cast("long"))
   }
 
-  val pipelineV4Sql: String = """
+  val pipelineV4Sql: String = s"""
     WITH toksAll AS (
-      SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    w AS (
-      SELECT doc_id, pos, array_to_string(t[pos + 1 : pos + 25], ' ') AS c
-      FROM (SELECT doc_id, t,
-              unnest(generate_series(0, len(t) - 25)) AS pos
-            FROM toksAll)),
-    b AS (SELECT DISTINCT c FROM w WHERE doc_id % 31 = 0),
-    hits AS (
-      SELECT w.doc_id, w.pos, w.pos + 24 AS cend
-      FROM w JOIN b USING (c) WHERE w.doc_id % 31 <> 0),
-    tok AS (
-      SELECT doc_id, pos, t[pos + 1] AS tk
-      FROM (SELECT doc_id, t,
-              unnest(generate_series(0, len(t) - 1)) AS pos
-            FROM toksAll)
-      WHERE doc_id % 31 <> 0),
-    cv AS (
-      SELECT tok.doc_id, tok.pos, tok.tk,
-             MAX(h.cend) OVER (PARTITION BY tok.doc_id ORDER BY tok.pos
-                               ROWS UNBOUNDED PRECEDING) AS cov
-      FROM tok LEFT JOIN hits h
-        ON tok.doc_id = h.doc_id AND tok.pos = h.pos),
+      SELECT doc_id, string_split(text, ' ') AS t FROM documents),${decontamCoverSql("toksAll")},
     reb AS (
       SELECT doc_id,
              COALESCE(string_agg(
@@ -1347,44 +1309,7 @@ object Corpus {
       SELECT * FROM rw
       QUALIFY row_number() OVER (PARTITION BY md5(text)
                                  ORDER BY doc_id) = 1),
-    c AS (
-      SELECT source, doc_id,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-      FROM dedup),
-    q AS (
-      SELECT source, CAST(SUM(n_tok) AS BIGINT) AS src_tok,
-             CAST(floor(sqrt(CAST(SUM(n_tok) AS DOUBLE)) * 1000000.0
-               + 0.5) AS BIGINT) AS wq
-      FROM c GROUP BY 1),
-    t AS (
-      SELECT CAST(SUM(src_tok) AS BIGINT) * 2 AS budget,
-             CAST(SUM(wq) AS BIGINT) AS sumwq FROM q),
-    sched AS (
-      SELECT source, CAST(floor(e) AS BIGINT) AS full_e,
-             CAST(floor((e - floor(e)) *
-               CAST(1152921504606846976 AS DOUBLE)) AS BIGINT) AS thr
-      FROM (SELECT source, LEAST(4.0,
-              CAST(budget AS DOUBLE) * wq / sumwq / src_tok) AS e
-            FROM q, t)),
-    inst AS (
-      SELECT source, doc_id, n_tok,
-             unnest(generate_series(0, reps - 1)) AS rep
-      FROM (SELECT c.source, c.doc_id, c.n_tok,
-              s.full_e + (CASE WHEN ('0x' || substring(md5('mixk:' ||
-                  CAST(c.doc_id AS VARCHAR)), 1, 15))::UBIGINT::BIGINT
-                  < s.thr THEN 1 ELSE 0 END) AS reps
-            FROM c JOIN sched s USING (source))
-      WHERE reps >= 1),
-    h AS (
-      SELECT source, n_tok,
-             ('0x' || substring(md5('mix:' || CAST(doc_id AS VARCHAR) ||
-               '#' || CAST(rep AS VARCHAR)), 1, 8))::UBIGINT::BIGINT
-               AS h32
-      FROM inst)
-    SELECT CAST(floor(h32 / 67108864.0) AS BIGINT) AS slice, source,
-           COUNT(*) AS n_inst, CAST(SUM(n_tok) AS BIGINT) AS tok_sum,
-           CAST(SUM(CAST(h32 AS DECIMAL(18,0))) AS DOUBLE) AS h_sum
-    FROM h GROUP BY 1, 2 ORDER BY slice, source"""
+    ${mixtureSql("dedup")}"""
 
   /** The corpus DATASHEET — the per-source summary every corpus
     * release publishes: document/token/char totals, mean lengths, and
@@ -1439,28 +1364,13 @@ object Corpus {
     * the 8-byte hash). Unlike dedup_lines this keeps the tail partial
     * block — removal must cover the whole document.
     */
-  def dedupParagraphs(s: SparkSession, dir: String): DataFrame = {
-    val nBlocks = ceil(size(toks) / lit(10.0)).cast("int")
-    val blockArr = transform(sequence(lit(1), nBlocks),
-      i => concat_ws(" ", slice(toks, (i - 1) * 10 + 1, lit(10))))
-    val b = Tables.hot(docs(s, dir)
-      .select(col("doc_id"), posexplode(blockArr).as(Seq("pos", "blk")))
-      .select(col("doc_id"), col("pos"), xxhash64(col("blk")).as("bh"),
-        col("blk")))
-    val packed = expr("""CASE WHEN doc_id >= 0 AND doc_id < 4398046511104
-        AND pos >= 0 AND pos < 1048576
-      THEN doc_id * 1048576 + pos
-      ELSE raise_error(concat('dedup_paragraphs: unpackable (doc_id, pos)=(',
-        CAST(doc_id AS STRING), ',', CAST(pos AS STRING), ')')) END""")
-    val canon = b.select(col("bh"), packed.as("pk"))
-      .groupBy("bh").agg(min(col("pk")).as("cp"))
-    val kept = b.join(canon, Seq("bh"))
-      .filter(packed === col("cp"))
-    val reb = kept.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_kept"),
-        md5(concat_ws(" ",
-          transform(array_sort(collect_list(struct(col("pos"), col("blk")))),
-            x => x.getField("blk")))).as("rebuilt_md5"))
+  def dedupParagraphs(s: SparkSession, dir: String): DataFrame =
+    dedupParagraphsCore(docs(s, dir))
+
+  private[graft] def dedupParagraphsCore(docsDf: DataFrame): DataFrame = {
+    val b = Tables.hot(paragraphBlocks(docsDf, 10))
+    val reb = keptBlocks(b).groupBy("doc_id")
+      .agg(count(lit(1)).as("n_kept"), md5(keptText).as("rebuilt_md5"))
     val tot = b.groupBy("doc_id").agg(count(lit(1)).as("n_blocks"))
     tot.join(reb, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -1470,17 +1380,39 @@ object Corpus {
       .orderBy("doc_id")
   }
 
-  val dedupParagraphsSql: String = """
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    b AS (
-      SELECT doc_id, pos,
-             array_to_string(t[pos * 10 + 1 : pos * 10 + 10], ' ') AS blk
-      FROM (SELECT doc_id, t,
-              unnest(generate_series(0,
-                CAST(ceil(len(t) / 10.0) AS INT) - 1)) AS pos
-            FROM toks)),
-    canon AS (
-      SELECT blk, MIN(doc_id * 1048576 + pos) AS cp FROM b GROUP BY blk),
+  /** (doc_id, pos, bh, blk) for every `blockTokens`-token block of
+    * every document, the tail partial block included. */
+  private[graft] def paragraphBlocks(docsDf: DataFrame,
+                                     blockTokens: Int): DataFrame = {
+    val nBlocks = ceil(size(toks) / lit(blockTokens.toDouble)).cast("int")
+    val blockArr = transform(sequence(lit(1), nBlocks),
+      i => concat_ws(" ", slice(toks, (i - 1) * blockTokens + 1,
+        lit(blockTokens))))
+    docsDf
+      .select(col("doc_id"), posexplode(blockArr).as(Seq("pos", "blk")))
+      .select(col("doc_id"), col("pos"), xxhash64(col("blk")).as("bh"),
+        col("blk"))
+  }
+
+  /** The blocks that are their content's canonical (smallest packed
+    * (doc_id, pos)) occurrence — dedup_paragraphs' keep decision, also
+    * the CorpusPipeline.dedupParagraphs step's. */
+  private[graft] def keptBlocks(blocks: DataFrame): DataFrame = {
+    val packed = packedDocPos("dedup_paragraphs")
+    val canon = blocks.select(col("bh"), packed.as("pk"))
+      .groupBy("bh").agg(min(col("pk")).as("cp"))
+    blocks.join(canon, Seq("bh")).filter(packed === col("cp"))
+  }
+
+  /** Per-doc aggregate over kept blocks: their text rejoined in
+    * position order. */
+  private[graft] def keptText: Column =
+    concat_ws(" ",
+      transform(array_sort(collect_list(struct(col("pos"), col("blk")))),
+        x => x.getField("blk")))
+
+  val dedupParagraphsSql: String = s"""
+    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),$blockCanonSql,
     kept AS (
       SELECT b.doc_id, b.pos, b.blk
       FROM b JOIN canon c ON b.blk = c.blk
@@ -1496,6 +1428,21 @@ object Corpus {
            COALESCE(r.rebuilt_md5, md5('')) AS rebuilt_md5
     FROM tot t LEFT JOIN reb r ON t.doc_id = r.doc_id
     ORDER BY t.doc_id"""
+
+  /** Oracle of [[paragraphBlocks]] + the canonical (smallest packed
+    * (doc_id, pos)) occurrence per block over the (doc_id, t) CTE
+    * `toks`: CTEs b, canon — dedup_paragraphs' and
+    * corpus_pipeline_v2's. */
+  private def blockCanonSql: String = """
+    b AS (
+      SELECT doc_id, pos,
+             array_to_string(t[pos * 10 + 1 : pos * 10 + 10], ' ') AS blk
+      FROM (SELECT doc_id, t,
+              unnest(generate_series(0,
+                CAST(ceil(len(t) / 10.0) AS INT) - 1)) AS pos
+            FROM toks)),
+    canon AS (
+      SELECT blk, MIN(doc_id * 1048576 + pos) AS cp FROM b GROUP BY blk)"""
 
   /** DSIR-style importance weighting (Xie et al. 2023, "Data Selection
     * for Language Models via Importance Resampling"): score every
@@ -1710,6 +1657,46 @@ object Corpus {
     FROM agg a JOIN bins b ON a.source = b.source
     ORDER BY a.source"""
 
+  /** The (doc_id, pos) → one-long packing every canonical-first-
+    * occurrence argmin keys on: doc_id·2²⁰ + pos, so the argmin is ONE
+    * primitive-MIN hash aggregate (a struct min would regress it to a
+    * SortAggregate — the dedup_keep_best trap). Outside doc_id ∈
+    * [0, 2⁴²), pos ∈ [0, 2²⁰) two pairs would share a key, so the row
+    * fails loudly, naming `op` and the offending pair. */
+  private[graft] def packedDocPos(op: String): Column =
+    expr(s"""CASE WHEN doc_id >= 0 AND doc_id < 4398046511104
+        AND pos >= 0 AND pos < 1048576
+      THEN doc_id * 1048576 + pos
+      ELSE raise_error(concat('$op: unpackable (doc_id, pos)=(',
+        CAST(doc_id AS STRING), ',', CAST(pos AS STRING), ')')) END""")
+
+  /** The window-keying stage of dedup_substrings, pre-checkpoint:
+    * (doc_id, pos, h1, h2) for every w-token window. Exposed so
+    * PlanAuditSpec can pin the native rolling-hash shape (the
+    * checkpointed final plan no longer contains this subtree). */
+  private[graft] def substringWindows(docsDf: DataFrame,
+                                      w: Int): DataFrame =
+    docsDf
+      .select(col("doc_id"),
+        explode(call_function("rolling_hash_windows", toks, lit(w)))
+          .as("wh"))
+      .select(col("doc_id"), col("wh.pos").as("pos"),
+        col("wh.h1").as("h1"), col("wh.h2").as("h2"))
+
+  /** The duplicate windows of dedup_substrings (also the
+    * CorpusPipeline.dedupSubstrings step): (doc_id, pos) of every
+    * w-token window whose content occurs at a smaller packed
+    * (doc_id, pos). */
+  private[graft] def substringDupHits(docsDf: DataFrame,
+                                      w: Int): DataFrame = {
+    val packed = packedDocPos("dedup_substrings")
+    val wins = Tables.hot(substringWindows(docsDf, w))
+    val canon = wins.groupBy("h1", "h2").agg(min(packed).as("cp"))
+    wins.join(canon, Seq("h1", "h2"))
+      .filter(packed =!= col("cp"))
+      .select(col("doc_id"), col("pos"))
+  }
+
   /** Exact shared-substring removal — the published dedup standard the
     * block-grain ops under-match (Lee et al. 2021, "Deduplicating
     * Training Data Makes Language Models Better": remove every
@@ -1724,7 +1711,7 @@ object Corpus {
     * pos) — first occurrence kept, the deterministic analog of the
     * paper's suffix-array order; a token is removed iff ANY duplicate
     * window covers it (overlapping windows merge into spans for free
-    * via the running-max coverage); documents rebuild from surviving
+    * via the fold's running max covered end); documents rebuild from surviving
     * tokens, certified byte-exact by md5 against the oracle's
     * string-content replay.
     *
@@ -1747,44 +1734,27 @@ object Corpus {
     * duplicate-filter rows imply, generalized to the published
     * exact-substring standard.
     */
-  /** The window-keying stage of dedup_substrings, pre-checkpoint:
-    * (doc_id, pos, h1, h2) for every w-token window. Exposed so
-    * PlanAuditSpec can pin the native rolling-hash shape (the
-    * checkpointed final plan no longer contains this subtree). */
-  private[graft] def substringWindows(docsDf: DataFrame,
-                                      w: Int): DataFrame =
-    docsDf
-      .select(col("doc_id"),
-        explode(call_function("rolling_hash_windows", toks, lit(w)))
-          .as("wh"))
-      .select(col("doc_id"), col("wh.pos").as("pos"),
-        col("wh.h1").as("h1"), col("wh.h2").as("h2"))
-
   private[graft] def substringDedupCore(docsDf: DataFrame,
-                                        w: Int): DataFrame = {
-    val packed = expr("""CASE WHEN doc_id >= 0 AND doc_id < 4398046511104
-        AND pos >= 0 AND pos < 1048576
-      THEN doc_id * 1048576 + pos
-      ELSE raise_error(concat('dedup_substrings: unpackable (doc_id, pos)=(',
-        CAST(doc_id AS STRING), ',', CAST(pos AS STRING), ')')) END""")
-    val wins = Tables.hot(substringWindows(docsDf, w))
-    val canon = wins.groupBy("h1", "h2").agg(min(packed).as("cp"))
-    val removed = wins.join(canon, Seq("h1", "h2"))
-      .filter(packed =!= col("cp"))
-      .select(col("doc_id"), col("pos"))
-    // round 16: the coverage tail moved from posexplode + per-token
-    // left join + running-max window (three full-data exchanges of
-    // the token stream) to the shared per-doc fold — only the
-    // non-canonical window positions shuffle
-    spanFoldReport(docsDf, removed, w, "n_dropped")
-  }
+                                        w: Int): DataFrame =
+    spanFoldReport(docsDf, substringDupHits(docsDf, w), w, "n_dropped")
 
-  def dedupSubstrings(s: SparkSession, dir: String): DataFrame = {
+  def dedupSubstrings(s: SparkSession, dir: String): DataFrame =
     substringDedupCore(docs(s, dir), 50)
-  }
 
-  val dedupSubstringsSql: String = """
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+  val dedupSubstringsSql: String = s"""
+    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),$substringCoverSql
+    SELECT doc_id, COUNT(*) AS n_tok,
+           CAST(SUM(CASE WHEN cov IS NOT NULL AND cov >= pos
+                    THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
+           COALESCE(md5(string_agg(
+             CASE WHEN cov IS NULL OR cov < pos THEN tk END, ' '
+             ORDER BY pos)), md5('')) AS rebuilt_md5
+    FROM cv GROUP BY doc_id ORDER BY doc_id"""
+
+  /** Oracle of [[substringDupHits]] + per-token coverage over the
+    * (doc_id, t) CTE `toks`: CTEs w, canon, removed, tok, cv —
+    * dedup_substrings' and corpus_pipeline_v3's. */
+  private def substringCoverSql: String = """
     w AS (
       SELECT doc_id, pos, array_to_string(t[pos + 1 : pos + 50], ' ') AS c
       FROM (SELECT doc_id, t,
@@ -1805,14 +1775,7 @@ object Corpus {
              MAX(r.cend) OVER (PARTITION BY tok.doc_id ORDER BY tok.pos
                                ROWS UNBOUNDED PRECEDING) AS cov
       FROM tok LEFT JOIN removed r
-        ON tok.doc_id = r.doc_id AND tok.pos = r.pos)
-    SELECT doc_id, COUNT(*) AS n_tok,
-           CAST(SUM(CASE WHEN cov IS NOT NULL AND cov >= pos
-                    THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-           COALESCE(md5(string_agg(
-             CASE WHEN cov IS NULL OR cov < pos THEN tk END, ' '
-             ORDER BY pos)), md5('')) AS rebuilt_md5
-    FROM cv GROUP BY doc_id ORDER BY doc_id"""
+        ON tok.doc_id = r.doc_id AND tok.pos = r.pos)"""
 
   /** Importance sampling — keep probability PROPORTIONAL to a per-doc
     * quality weight (here the distinct-token ratio, the Gopher-style

@@ -104,7 +104,7 @@ object StreamDedup {
   /** Streaming twin of ops.Corpus.textDecontamSpan — the crawl
     * screened against the FROZEN benchmark window index as documents
     * arrive (cert #21): the benchmark (h1, h2) window set is the
-    * static side (built by the batch-shared `substringWindows`
+    * static side (built by the batch-shared `benchWindowSet`
     * construction — eval suites are fixed and tiny, so the index
     * broadcasts), each incoming doc's stride-1 windows come from the
     * same native rolling_hash_windows STATELESS (explode_outer keeps
@@ -123,10 +123,8 @@ object StreamDedup {
                          w: Int = 25): DataFrame = {
     import graft.ops.Corpus
     val isBench = col("doc_id") % 31 === 0
-    val bench = graft.Tables.hot(
-      Corpus.substringWindows(
-        graft.Tables.load(spark, dir, "documents").filter(isBench), w)
-        .select("h1", "h2").distinct())
+    val bench = graft.Tables.hot(Corpus.benchWindowSet(
+      graft.Tables.load(spark, dir, "documents").filter(isBench), w))
       .withColumn("hit", lit(1))
     val wins = readDocs(spark, dir).filter(!isBench)
       .select(col("doc_id"), col("text"),
@@ -151,19 +149,18 @@ object StreamDedup {
 
   /** Streaming twin of the corpus ASSEMBLY chain head —
     * api.CorpusPipeline.qualityFilter().dedupExact as documents arrive:
-    * the quality gate is a stateless filter (identical predicate), and
-    * the exact-dedup keeper is running state — min doc_id per content
-    * hash (a streaming groupBy, Update mode), which converges to the
-    * batch window-argmin keeper REGARDLESS of arrival order, unlike a
-    * first-arrival dropDuplicates whose keeper is order-dependent.
+    * the quality gate is a stateless filter (the batch step's own
+    * Corpus.qualityGate column), and the exact-dedup keeper is running
+    * state — min doc_id per content hash (a streaming groupBy, Update
+    * mode), which converges to the batch window-argmin keeper
+    * REGARDLESS of arrival order, unlike a first-arrival
+    * dropDuplicates whose keeper is order-dependent.
     * Emits (h, keep_id, n_seen); the final min per hash equals the
     * batch chain's kept set exactly (EventStreamSpec cert #17 — the
     * first streaming cert over the documents table). */
   def corpusAssemblyStream(spark: SparkSession, dir: String): DataFrame = {
-    val t = split(col("text"), " ")
     readDocs(spark, dir)
-      .filter(size(t) >= 20 && size(t) <= 100000 &&
-        size(array_distinct(t)).cast("double") / size(t) >= 0.1)
+      .filter(graft.ops.Corpus.qualityGate())
       .withColumn("h", md5(col("text")))
       .groupBy("h")
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_seen"))

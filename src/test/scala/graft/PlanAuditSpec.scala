@@ -559,6 +559,28 @@ class PlanAuditSpec extends SparkSpec {
         "rollup and the audit aggregate, nothing else")
   }
 
+  test("the corpus chain's span surgery is the per-doc fold") {
+    import org.apache.spark.sql.catalyst.expressions.PosExplode
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    // corpus_pipeline_v3 (dedupSubstrings) and _v4 (decontamSpan) run
+    // the same hit fold as dedup_substrings / text_decontam_span: no
+    // token posexplode and no running-max window over a `cend`
+    // coverage column anywhere in the chain
+    for (q <- Seq("corpus_pipeline_v3", "corpus_pipeline_v4")) {
+      val p = collectAll(initialPlan(q))
+      assert(!p.exists {
+        case g: GenerateExec => g.generator.isInstanceOf[PosExplode]
+        case _ => false
+      }, s"$q: a token posexplode is back in the span surgery")
+      assert(!p.exists {
+        case w: WindowExec =>
+          w.windowExpression.exists(_.references.exists(_.name == "cend"))
+        case _ => false
+      }, s"$q: a coverage window over cend is back in the span surgery")
+    }
+  }
+
   test("round-16 additions keep their scale shapes") {
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     import org.apache.spark.sql.execution.aggregate.SortAggregateExec
