@@ -15,7 +15,8 @@ import org.apache.spark.storage.StorageLevel
 /** The one lifecycle for SESSION-FROZEN artifacts: state a production
   * deployment builds once and serves every query from (IVF/PQ
   * indexes, graph edges, degrees and adjacency, tokenized corpora,
-  * BM25 stats). Per-query intermediates stay on `Tables.hot*`.
+  * BM25 stats, the `Tables` catalog's schemas). Per-query
+  * intermediates stay on `Tables.hot*`.
   *
   *  - `frozen(s, key)(build)` serves the live artifact for (s, key),
   *    or runs `build` exactly once, concurrent callers included. Keys

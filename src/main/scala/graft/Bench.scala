@@ -80,8 +80,9 @@ object Bench {
       * truncated from the front every round, so `parsed` was null in
       * all five BENCH artifacts. Now: the full detail object (per-query
       * min wall/cpu + every raw sample) goes to stderr AND
-      * BENCH_DETAIL.json next to the repo for adjudication, and stdout
-      * gets ONE compact final line guaranteed to fit the tail window.
+      * BENCH_DETAIL.json in the working directory for adjudication (a
+      * failed write throws, after the result line), and stdout gets
+      * ONE compact final line guaranteed to fit the tail window.
       */
     def emit(): Unit = if (printed.compareAndSet(false, true)) {
       val snap = samplesLock.synchronized { samples.toMap }
@@ -105,12 +106,12 @@ object Bench {
       // full-registry detail artifact the driver/judge adjudicate from
       // — they get their own file (round-6 verdict: a 4-query
       // spot-check overwrote the 161-query record)
-      val detailName =
-        if (args.nonEmpty) "BENCH_DETAIL.partial.json" else "BENCH_DETAIL.json"
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"/root/repo/$detailName"),
-        full.getBytes("UTF-8"))
-      catch { case _: Throwable => () } // detail file is best-effort
+      val detailPath = java.nio.file.Paths.get(
+        if (args.nonEmpty) "BENCH_DETAIL.partial.json" else "BENCH_DETAIL.json")
+        .toAbsolutePath
+      val detailFailure =
+        try { java.nio.file.Files.write(detailPath, full.getBytes("UTF-8")); None }
+        catch { case e: java.io.IOException => Some(e) }
       val head = s""""metric":"total","value":$total,"unit":"sec","total_cpu":$totalCpu,"iters":$itersDone,"n_queries":${names.size},"n_ok":$nOk,"elapsed":${r3(elapsed)},"sf":"$sfDir""""
       // Per-query minima the DRIVER can actually see: the final line
       // must fit its ~2000-char tail window, and the full 260-query map
@@ -139,6 +140,9 @@ object Bench {
       }
       println(line)
       System.out.flush()
+      // after the result line, so a failed write still leaves the result
+      detailFailure.foreach(e => throw new java.io.UncheckedIOException(
+        s"[bench] could not write $detailPath", e))
     }
     Runtime.getRuntime.addShutdownHook(new Thread(() => emit()))
 
@@ -244,7 +248,6 @@ object Bench {
       else System.err.println(f"[bench] iteration $it curtailed at budget ($elapsed%.0f s)")
       it += 1
     }
-    emit()
-    spark.stop()
+    try emit() finally spark.stop()
   }
 }

@@ -1,13 +1,28 @@
 package graft
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-/** Parquet table loader for the graft engine.
+/** Parquet table loader for the graft engine, and the session's table
+  * catalog.
   *
-  * Mirrors the reference's habit of scanning parquet per calculator
-  * (see reference duckpipe/calculator/AirportDistanceCalculator.py:82),
-  * but loads lazily through Spark's datasource so column pruning and
-  * predicate pushdown reach the scan.
+  * Loads stay lazy through Spark's datasource, so column pruning and
+  * predicate pushdown reach the scan. The catalog contract:
+  *  - Once per session: a table's schema is inferred (one Spark job)
+  *    the first time a session loads it, and later loads hand the
+  *    stored schema to `spark.read.schema`, which runs no job. The
+  *    entry is an `Artifacts.frozen` artifact, so it is per session
+  *    (the session conf shapes inference, e.g. nanosAsLong) and goes
+  *    when the session stops.
+  *  - Keyed by path and stamp: the qualified path plus the length and
+  *    modification time of the file, or of every leaf file when
+  *    `<name>.parquet` is a directory, read from Hadoop's FileSystem
+  *    (so `s3a://` and other cloud URIs work as local paths do).
+  *  - Never stale: a table changed in place gets a new stamp, and the
+  *    next load infers again.
+  *  - A fresh Dataset per load, with fresh attribute ids, so two loads
+  *    of one table self-join like two scans.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -15,7 +30,29 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.schema(schema(spark, dir, name)).parquet(s"$dir/$name.parquet")
+
+  /** The catalog's schema of `dir/name.parquet` in this session; also
+    * what streaming sources over the table declare. */
+  def schema(spark: SparkSession, dir: String, name: String): StructType = {
+    val path = new Path(s"$dir/$name.parquet")
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val qualified = fs.makeQualified(path)
+    Artifacts.frozen(spark, ("table", qualified.toString, stamp(fs, qualified))) {
+      spark.read.parquet(path.toString).schema
+    }
+  }
+
+  /** (leaf path, length, modification time) of every file under `p`. */
+  private def stamp(fs: FileSystem, p: Path): Vector[(String, Long, Long)] = {
+    val files = fs.listFiles(p, true)
+    val b = Vector.newBuilder[(String, Long, Long)]
+    while (files.hasNext) {
+      val f = files.next()
+      b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    b.result().sorted
+  }
 
   /** Normalize a timestamp-ish column to an epoch-microsecond BIGINT,
     * tolerant of every vintage the driver's generator has shipped:

@@ -48,10 +48,17 @@ object Sources {
 
   /** Hive-style partitioned parquet sink. Partition columns become
     * directories → readers prune partitions from WHERE clauses without
-    * touching data files. */
+    * touching data files. Returns the schema the sink reads back as:
+    * the data columns, then the partition columns, all typed as
+    * written. `spark.read.schema(it)` infers nothing, so the read-back
+    * runs no job and also works on an empty sink, which has no footer
+    * to infer from. */
   def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String],
-                       mode: SaveMode = SaveMode.Overwrite): Unit =
+                       mode: SaveMode = SaveMode.Overwrite): StructType = {
     df.write.mode(mode).partitionBy(partitionCols: _*).parquet(path)
+    StructType(df.schema.filterNot(f => partitionCols.contains(f.name)) ++
+      partitionCols.map(df.schema(_)))
+  }
 
   /** Co-locate + order rows for downstream merge-friendly reads:
     * repartition on the join key and sort within partitions (the

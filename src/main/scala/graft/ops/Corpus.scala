@@ -230,15 +230,6 @@ object Corpus {
            md5(array_to_string(wt, ' ')) AS h
     FROM win ORDER BY doc_id, win_id"""
 
-  /** Mixture rebalancing: downsample every language stratum to the
-    * size of the smallest one (equal target shares — the "rebalance a
-    * skewed source mix" pipeline step). The per-stratum rate is DERIVED
-    * FROM CORPUS STATISTICS (min count / stratum count, a broadcast of
-    * a 5-row aggregate), not a constant — the part sample_stratified
-    * doesn't exercise. The keep decision hashes the row (md5 prefix as
-    * a uniform u32 fraction), so it stays deterministic and
-    * cluster-size-independent; both engines compute the identical
-    * double (exact u32 → double, division by 2^32 exact). */
   /** Token-budget EPOCH scheduler — the data-mixing table every
     * training run publishes next to its rates (corpus_mix /
     * sample_temperature set per-source RATES; this answers "how many
@@ -502,6 +493,15 @@ object Corpus {
            CAST(SUM(CAST(h32 AS DECIMAL(18,0))) AS DOUBLE) AS h_sum
     FROM s GROUP BY 1, 2 ORDER BY stage, source"""
 
+  /** Mixture rebalancing: downsample every language stratum to the
+    * size of the smallest one (equal target shares — the "rebalance a
+    * skewed source mix" pipeline step). The per-stratum rate is DERIVED
+    * FROM CORPUS STATISTICS (min count / stratum count, a broadcast of
+    * a 5-row aggregate), not a constant — the part sample_stratified
+    * doesn't exercise. The keep decision hashes the row (md5 prefix as
+    * a uniform u32 fraction), so it stays deterministic and
+    * cluster-size-independent; both engines compute the identical
+    * double (exact u32 → double, division by 2^32 exact). */
   def corpusMix(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
     val counts = d.groupBy("lang").agg(count(lit(1)).as("n_total"))

@@ -154,10 +154,10 @@ object IoQueries {
     * subquery actually reached the scan. */
   def qDppJoin(s: SparkSession, dir: String): DataFrame = {
     val tmp = scratchDir(s, "graft-dpp")
-    graft.io.Sources.writePartitioned(
+    val written = graft.io.Sources.writePartitioned(
       Tables.loadEventsUs(s, dir).select("event_type", "user_id", "value"),
       tmp, Seq("event_type"))
-    val fact = s.read.parquet(tmp)
+    val fact = s.read.schema(written).parquet(tmp)
     val dim = Tables.load(s, dir, "events")
       .select(col("event_type").as("det")).distinct()
       .filter(col("det").isin("click", "purchase"))
@@ -187,22 +187,19 @@ object IoQueries {
     */
   def qPartitionSink(s: SparkSession, dir: String): DataFrame = {
     val tmp = scratchDir(s, "graft-part")
-    Tables.loadEventsUs(s, dir)
-      .withColumn("day", expr("ts_us DIV 86400000000"))
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), col("day"))
-      .write.mode("overwrite").partitionBy("day").parquet(tmp)
-    partitionedRead(s, tmp)
-  }
-
-  /** The pruned read-back, factored so the spec can assert the plan. */
-  private[graft] def partitionedRead(s: SparkSession, tmp: String): DataFrame =
-    s.read.parquet(tmp)
+    val written = graft.io.Sources.writePartitioned(
+      Tables.loadEventsUs(s, dir)
+        .withColumn("day", expr("ts_us DIV 86400000000"))
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          col("value"), col("day")),
+      tmp, Seq("day"))
+    s.read.schema(written).parquet(tmp)
       .filter(pmod(col("day"), lit(7)) === 3)
-      .groupBy(col("day").cast("long").as("day"))
+      .groupBy("day")
       .agg(count(lit(1)).as("n"),
         round(QueryDef.dsum(col("value"), 6), 4).as("sum_value"))
       .orderBy("day")
+  }
 
   val qPartitionSinkSql: String = """
     WITH ev AS (

@@ -13,17 +13,16 @@ import org.apache.spark.sql.types._
   *
   * The events timestamp has shipped as INT64 nanos, TIMESTAMP, and
   * TIMESTAMP_NTZ across test-data vintages; `readEvents` takes the
-  * streaming schema from a one-footer batch read of the same file and
+  * streaming schema from the `Tables` catalog (the batch schema) and
   * normalizes through `Tables.withMicros`, yielding both the µs bigint
   * (exact) and a TIMESTAMP column (for watermarks/windows).
   */
 object EventStream {
 
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    // readStream needs an explicit schema; derive it from the actual
-    // file footer so parquet-type drift can't desync batch vs stream
-    val eventsSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = spark.readStream.schema(eventsSchema)
+    // readStream needs an explicit schema; take the batch side's
+    // catalog schema so parquet-type drift can't desync batch vs stream
+    val raw = spark.readStream.schema(graft.Tables.schema(spark, dir, "events"))
       // file-stream source wants a directory; select just the events file
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)

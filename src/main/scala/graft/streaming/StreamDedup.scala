@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Streaming exact deduplication — the incremental twin of
   * ops.TextDedup.dedupExact: documents arriving on a stream are
@@ -13,15 +12,8 @@ import org.apache.spark.sql.types._
   */
 object StreamDedup {
 
-  val docsSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType),
-    StructField("lang", StringType), StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
   def distinctDocs(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    readDocs(spark, dir)
       .withColumn("h", md5(col("text")))
       .dropDuplicates("h")
       .select("doc_id", "h")
@@ -40,14 +32,12 @@ object StreamDedup {
   def dedupEventsWatermarked(spark: SparkSession, dir: String): DataFrame =
     dedupWatermarked(EventStream.readEvents(spark, dir))
 
-  /** Documents as a stream, schema from the file footer (the
+  /** Documents as a stream, schema from the `Tables` catalog (the
     * readEvents pattern — parquet-type drift cannot desync sides). */
-  def readDocs(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    spark.readStream.schema(schema)
+  def readDocs(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(graft.Tables.schema(spark, dir, "documents"))
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
-  }
 
   /** Streaming twin of ops.TextDedup.dedupIncremental — the daily
     * crawl as it actually runs: the INCREMENT arrives on a stream and
@@ -284,8 +274,7 @@ object StreamDedup {
     val centArr = broadcast(graft.Tables.hot(cents.agg(
       array_sort(collect_list(struct(col("cent_id"), col("cv"))))
         .as("ca"))))
-    val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    val qs = spark.readStream.schema(schema)
+    val qs = spark.readStream.schema(graft.Tables.schema(spark, dir, "embeddings"))
       .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
       .filter(expr("vec_id % 100 = 0"))
       .select(col("vec_id").as("qid"),

@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.SpecBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -9,6 +14,9 @@ import org.apache.spark.sql.types._
   * round-5 drift silently took down the whole events family. This spec
   * fails loudly the moment a table stops loading or a timestamp column
   * stops normalizing, in EVERY sf dir the driver generates.
+  *
+  * Also the catalog contract: a table's schema is resolved once per
+  * session, never served stale, and every load is a fresh Dataset.
   */
 class TablesSpec extends SparkSpec {
 
@@ -45,6 +53,55 @@ class TablesSpec extends SparkSpec {
         .toSeq.map(_.asInstanceOf[Long]).toArray
       assert(lo > 631152000000000L && hi < 4102444800000000L,
         s"$dir o_orderdate o_us out of range: [$lo, $hi]")
+    }
+  }
+
+  /** Spark jobs started while `body` runs, counted by a listener. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    SpecBus.drain(sc)
+    sc.addSparkListener(l)
+    try { body; SpecBus.drain(sc) } finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("catalog: a second load of an unchanged table runs no Spark job") {
+    Tables.load(spark, sfDir, "lineitem")
+    assert(jobsDuring(Tables.load(spark, sfDir, "lineitem")) == 0)
+  }
+
+  test("catalog: every load is a fresh Dataset, so two loads self-join") {
+    val a = Tables.load(spark, sfDir, "orders")
+    val b = Tables.load(spark, sfDir, "orders")
+    assert(a.queryExecution.analyzed.outputSet
+      .intersect(b.queryExecution.analyzed.outputSet).isEmpty)
+    val n = a.join(b, a("o_orderkey") === b("o_orderkey"))
+      .select(a("o_orderkey"), b("o_custkey")).count()
+    assert(n == a.count())
+  }
+
+  test("catalog: a table overwritten in place loads with its new schema") {
+    val dir = Files.createTempDirectory("graft-tables").toString
+    try {
+      spark.range(3).toDF("a").write.parquet(s"$dir/t.parquet")
+      assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("a"))
+      spark.range(3).selectExpr("id AS b", "CAST(id AS STRING) AS c")
+        .write.mode("overwrite").parquet(s"$dir/t.parquet")
+      val t = Tables.load(spark, dir, "t")
+      assert(t.columns.toSeq == Seq("b", "c"))
+      assert(t.where("c = '2'").count() == 1L)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("catalog: a second build of each relational_short query runs no job") {
+    for (q <- Seq("q1_agg", "q3_join_topn", "q13_custdist",
+                  "q14_promo_share", "q_funnel")) {
+      SparkEntry.queries(q)(spark, sfDir)
+      assert(jobsDuring(SparkEntry.queries(q)(spark, sfDir)) == 0, q)
     }
   }
 
