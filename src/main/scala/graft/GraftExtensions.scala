@@ -1,8 +1,7 @@
 package graft
 
 import graft.functions._
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{AnalysisException, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -27,16 +26,18 @@ object GraftFunctions {
   type Fn = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
   /** Spark's own builder: `ExpressionInfo` from the class, and a
-    * constructor match by arity that raises WRONG_NUM_ARGS at analysis
-    * (a `Seq[Expression]` constructor takes any arity and checks it in
-    * its `require`). */
+    * constructor match by arity that raises WRONG_NUM_ARGS at analysis.
+    * Every kernel has fixed-arity constructors only: a
+    * `Seq[Expression]` constructor would take any arity and fail later,
+    * outside the analyzer. */
   private def fn[T <: Expression: ClassTag](name: String): Fn = {
     val (info, builder) = FunctionRegistryBase.build[T](name, None)
     (FunctionIdentifier(name), info, builder)
   }
 
   // `cap` is an Int constructor argument taken from a literal, which
-  // the reflective builder cannot supply
+  // the reflective builder cannot supply; its failures are analysis
+  // errors like the reflective builder's
   private val pairCodes: Fn = (
     FunctionIdentifier("pair_codes"),
     FunctionRegistryBase.expressionInfo[PairCodes]("pair_codes", None),
@@ -47,16 +48,25 @@ object GraftFunctions {
       // fold it here rather than rejecting intent that is a valid cap)
       case Seq(c, cap) if cap.foldable =>
         cap.eval() match {
-          case n: Int => PairCodes(c, n)
+          case n: Int if n >= 0 => PairCodes(c, n)
           case n: Long if n >= 0 && n <= Int.MaxValue => PairCodes(c, n.toInt)
-          case other => throw new IllegalArgumentException(
-            "pair_codes cap must be a non-negative int-range literal; " +
-              s"got $other")
+          case other => throw capMismatch(args, "VALUE_OUT_OF_RANGE", Map(
+            "exprName" -> "`cap`", "valueRange" -> s"[0, ${Int.MaxValue}]",
+            "currentValue" -> String.valueOf(other)))
         }
-      case _ => throw new IllegalArgumentException(
-        "pair_codes expects (array<long>[, cap: int literal]); got " +
-          args.mkString(", "))
+      case Seq(_, cap) => throw capMismatch(args, "NON_FOLDABLE_INPUT", Map(
+        "inputName" -> "`cap`", "inputType" -> "\"INT\"",
+        "inputExpr" -> cap.sql))
+      case _ => throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+        Map("functionName" -> "`pair_codes`", "expectedNum" -> "[1, 2]",
+          "actualNum" -> args.size.toString,
+          "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
     })
+
+  private def capMismatch(args: Seq[Expression], sub: String,
+                          params: Map[String, String]): AnalysisException =
+    new AnalysisException(s"DATATYPE_MISMATCH.$sub", params +
+      ("sqlExpr" -> s"\"pair_codes(${args.map(_.sql).mkString(", ")})\""))
 
   val all: Seq[Fn] = Seq(
     fn[ClippedSegmentLength]("clipped_segment_length"),

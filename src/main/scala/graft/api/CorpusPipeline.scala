@@ -56,7 +56,8 @@ final case class CorpusPipeline(df: DataFrame) {
     * step is a pure within-row filter Catalyst pushes to the scan. */
   def gopherFilter(): CorpusPipeline =
     CorpusPipeline(df.filter(
-      !graft.ops.Retrieval.gopherRules.map(_._2).reduce(_ || _)))
+      !graft.ops.Retrieval.gopherRules(graft.ops.Text.toksOf(df))
+        .map(_._2).reduce(_ || _)))
 
   /** TRAINED quality gate (FineWeb-Edu/CCNet class) — apply a weight
     * vector learned by `ops.QualityLr.trainLr` as a pure within-row

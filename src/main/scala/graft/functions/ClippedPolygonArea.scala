@@ -16,11 +16,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Args: cx, cy, r (DOUBLE), xs, ys (ARRAY<DOUBLE> ring vertices,
   * closed implicitly) → DOUBLE.
   */
-case class ClippedPolygonArea(children: Seq[Expression])
+case class ClippedPolygonArea(cx: Expression, cy: Expression, r: Expression,
+    xs: Expression, ys: Expression)
     extends Expression with ImplicitCastInputTypes {
   override def prettyName: String = "clipped_polygon_area"
 
-  require(children.length == 5, "clipped_polygon_area takes (cx, cy, r, xs, ys)")
+  @transient override lazy val children: Seq[Expression] =
+    IndexedSeq(cx, cy, r, xs, ys)
 
   override def inputTypes: Seq[DataType] =
     Seq(DoubleType, DoubleType, DoubleType,
@@ -57,5 +59,6 @@ case class ClippedPolygonArea(children: Seq[Expression])
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
+    copy(newChildren(0), newChildren(1), newChildren(2),
+      newChildren(3), newChildren(4))
 }

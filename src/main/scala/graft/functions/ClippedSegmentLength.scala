@@ -14,11 +14,13 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   *
   * Args: cx, cy, r, x1, y1, x2, y2 (all DOUBLE) → DOUBLE.
   */
-case class ClippedSegmentLength(children: Seq[Expression])
+case class ClippedSegmentLength(cx: Expression, cy: Expression, r: Expression,
+    x1: Expression, y1: Expression, x2: Expression, y2: Expression)
     extends Expression with ImplicitCastInputTypes {
   override def prettyName: String = "clipped_segment_length"
 
-  require(children.length == 7, "clipped_segment_length takes 7 arguments")
+  @transient override lazy val children: Seq[Expression] =
+    IndexedSeq(cx, cy, r, x1, y1, x2, y2)
 
   // analysis-time implicit casts instead of interpreted-path
   // ClassCastExceptions on mistyped SQL literals
@@ -54,5 +56,6 @@ case class ClippedSegmentLength(children: Seq[Expression])
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
+    copy(newChildren(0), newChildren(1), newChildren(2), newChildren(3),
+      newChildren(4), newChildren(5), newChildren(6))
 }

@@ -50,9 +50,10 @@ object FfdMath {
   }
 }
 
-case class FfdBins(children: Seq[Expression])
+case class FfdBins(sortedSizes: Expression, capacity: Expression)
     extends Expression with ImplicitCastInputTypes {
-  require(children.length == 2, "ffd_bins takes (sorted_sizes, capacity)")
+  @transient override lazy val children: Seq[Expression] =
+    IndexedSeq(sortedSizes, capacity)
 
   override def inputTypes: Seq[DataType] =
     Seq(ArrayType(LongType), IntegerType)
@@ -83,5 +84,5 @@ case class FfdBins(children: Seq[Expression])
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
+    copy(sortedSizes = newChildren(0), capacity = newChildren(1))
 }

@@ -36,9 +36,10 @@ object HilbertMath {
   }
 }
 
-case class HilbertIndex(children: Seq[Expression])
+case class HilbertIndex(ix: Expression, iy: Expression, order: Expression)
     extends Expression with ImplicitCastInputTypes {
-  require(children.length == 3, "hilbert_index takes (ix, iy, order)")
+  @transient override lazy val children: Seq[Expression] =
+    IndexedSeq(ix, iy, order)
   override def prettyName: String = "hilbert_index"
 
   // analysis-time implicit casts (INT literals → LONG) instead of
@@ -72,5 +73,5 @@ case class HilbertIndex(children: Seq[Expression])
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
+    copy(ix = newChildren(0), iy = newChildren(1), order = newChildren(2))
 }

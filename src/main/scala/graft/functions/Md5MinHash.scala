@@ -56,9 +56,10 @@ object Md5MinHashMath {
   }
 }
 
-case class Md5MinHash(children: Seq[Expression])
+case class Md5MinHash(hashes: Expression, nPerms: Expression)
     extends Expression with ImplicitCastInputTypes {
-  require(children.length == 2, "md5_minhash takes (hashes, nPerms)")
+  @transient override lazy val children: Seq[Expression] =
+    IndexedSeq(hashes, nPerms)
 
   override def inputTypes: Seq[DataType] =
     Seq(ArrayType(LongType), IntegerType)
@@ -91,5 +92,5 @@ case class Md5MinHash(children: Seq[Expression])
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
+    copy(hashes = newChildren(0), nPerms = newChildren(1))
 }

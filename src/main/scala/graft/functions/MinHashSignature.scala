@@ -48,9 +48,10 @@ object MinHashMath {
   }
 }
 
-case class MinHashSignature(children: Seq[Expression])
+case class MinHashSignature(hashes: Expression, nPerms: Expression)
     extends Expression with ImplicitCastInputTypes {
-  require(children.length == 2, "minhash_signature takes (hashes, nPerms)")
+  @transient override lazy val children: Seq[Expression] =
+    IndexedSeq(hashes, nPerms)
   override def prettyName: String = "minhash_signature"
 
   override def inputTypes: Seq[DataType] =
@@ -82,5 +83,5 @@ case class MinHashSignature(children: Seq[Expression])
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
+    copy(hashes = newChildren(0), nPerms = newChildren(1))
 }

@@ -23,9 +23,10 @@ object TextNorm {
   }
 }
 
-case class NormalizeText(children: Seq[Expression])
+case class NormalizeText(text: Expression)
     extends Expression with ImplicitCastInputTypes {
-  require(children.length == 1, "normalize_text takes 1 argument")
+  @transient override lazy val children: Seq[Expression] =
+    IndexedSeq(text)
   override def prettyName: String = "normalize_text"
 
   // analysis-time implicit cast instead of an interpreted-path
@@ -53,5 +54,5 @@ case class NormalizeText(children: Seq[Expression])
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
+    copy(text = newChildren(0))
 }

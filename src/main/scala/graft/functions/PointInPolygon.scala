@@ -36,9 +36,11 @@ object PolyMath {
   }
 }
 
-case class PointInPolygon(children: Seq[Expression])
+case class PointInPolygon(px: Expression, py: Expression, xs: Expression,
+    ys: Expression)
     extends Expression with ImplicitCastInputTypes {
-  require(children.length == 4, "point_in_polygon takes (px, py, xs, ys)")
+  @transient override lazy val children: Seq[Expression] =
+    IndexedSeq(px, py, xs, ys)
   override def prettyName: String = "point_in_polygon"
 
   // analysis-time implicit casts instead of interpreted-path
@@ -75,5 +77,5 @@ case class PointInPolygon(children: Seq[Expression])
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
+    copy(newChildren(0), newChildren(1), newChildren(2), newChildren(3))
 }

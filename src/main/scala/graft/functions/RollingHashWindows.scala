@@ -68,9 +68,10 @@ object RollingHashMath {
   }
 }
 
-case class RollingHashWindows(children: Seq[Expression])
+case class RollingHashWindows(tokens: Expression, w: Expression)
     extends Expression with ImplicitCastInputTypes {
-  require(children.length == 2, "rolling_hash_windows takes (tokens, w)")
+  @transient override lazy val children: Seq[Expression] =
+    IndexedSeq(tokens, w)
 
   override def inputTypes: Seq[DataType] =
     Seq(ArrayType(StringType), IntegerType)
@@ -105,5 +106,5 @@ case class RollingHashWindows(children: Seq[Expression])
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
+    copy(tokens = newChildren(0), w = newChildren(1))
 }

@@ -67,25 +67,27 @@ abstract class BinaryVecExpression extends Expression with ImplicitCastInputType
 }
 
 /** Sequential dot product Σ aᵢ·bᵢ over array<double> columns. */
-case class VecDot(children: Seq[Expression]) extends BinaryVecExpression {
-  require(children.length == 2, "vec_dot takes (a, b)")
+case class VecDot(a: Expression, b: Expression) extends BinaryVecExpression {
+  @transient override lazy val children: Seq[Expression] =
+    IndexedSeq(a, b)
   override def prettyName: String = "vec_dot"
   override protected def kernel: String = "dot"
   override protected def compute(a: ArrayData, b: ArrayData): Double =
     VecMath.dot(a, b)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
+    copy(a = newChildren(0), b = newChildren(1))
 }
 
 /** Squared euclidean distance Σ (aᵢ−bᵢ)² over array<double> columns. */
-case class VecL2(children: Seq[Expression]) extends BinaryVecExpression {
-  require(children.length == 2, "vec_l2 takes (a, b)")
+case class VecL2(a: Expression, b: Expression) extends BinaryVecExpression {
+  @transient override lazy val children: Seq[Expression] =
+    IndexedSeq(a, b)
   override def prettyName: String = "vec_l2"
   override protected def kernel: String = "l2"
   override protected def compute(a: ArrayData, b: ArrayData): Double =
     VecMath.l2(a, b)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
+    copy(a = newChildren(0), b = newChildren(1))
 }

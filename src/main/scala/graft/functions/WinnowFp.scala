@@ -86,9 +86,10 @@ object WinnowFpMath {
   }
 }
 
-case class WinnowFp(children: Seq[Expression])
+case class WinnowFp(tokens: Expression, k: Expression, w: Expression)
     extends Expression with ImplicitCastInputTypes {
-  require(children.length == 3, "winnow_fp takes (tokens, k, w)")
+  @transient override lazy val children: Seq[Expression] =
+    IndexedSeq(tokens, k, w)
 
   override def inputTypes: Seq[DataType] =
     Seq(ArrayType(StringType), IntegerType, IntegerType)
@@ -127,5 +128,5 @@ case class WinnowFp(children: Seq[Expression])
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
+    copy(tokens = newChildren(0), k = newChildren(1), w = newChildren(2))
 }

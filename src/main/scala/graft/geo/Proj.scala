@@ -220,12 +220,24 @@ object Proj {
 
   /** Projected (x, y) in `from` → projected struct(x, y) in `to`, via
     * the geographic pivot (inverse then forward) — the reference's
-    * ST_Transform between projected CRSs. Plain column arithmetic,
-    * whole-stage codegen, no UDF. */
-  def transform(x: Column, y: Column, from: Crs, to: Crs): Column = {
-    val g = inv(from, x, y)
-    fwd(to, g.getField("lon"), g.getField("lat"))
-  }
+    * ST_Transform between projected CRSs. Staged as `transformAll`
+    * over a one-vertex array: an inline `fwd(inv(…))` copies the whole
+    * inverse tree into every one of the forward series' references,
+    * which took seconds to plan per query. */
+  def transform(x: Column, y: Column, from: Crs, to: Crs): Column =
+    element_at(transformAll(array(x), array(y), from, to), 1)
+
+  /** Vertex arrays (xs, ys) in `from` → array of struct(x, y) in `to`.
+    * The pivot runs as two lambda passes: the inverse builds a
+    * struct(lon, lat) per vertex, and the forward series reads that
+    * pass's lambda variable, so each vertex's expression is the two
+    * series side by side. No subexpression elimination reaches inside
+    * a lambda, so the nested form would evaluate (and plan) one
+    * inverse per forward reference. */
+  def transformAll(xs: Column, ys: Column, from: Crs, to: Crs): Column =
+    org.apache.spark.sql.functions.transform(
+      zip_with(xs, ys, (x, y) => inv(from, x, y)),
+      g => fwd(to, g.getField("lon"), g.getField("lat")))
 
   // ---- Lambert conformal conic (column expressions) --------------------
   /** (lonDeg, latDeg) → struct(x, y) meters under LCC 2SP. */

@@ -42,6 +42,29 @@ object Wkt {
       xy.getField("x"), xy.getField("y"), Proj.epsg(other), Proj.Epsg5179)
   }
 
+  /** Reproject the vertex-array columns `xs`, `ys` (nested ring arrays
+    * when `rings`) in place from `epsg` into the reference CRS, with
+    * the series of `toRef` — projected codes through the two-pass
+    * `Proj.transformAll`. The projected vertices land in one column
+    * first, so splitting them back into x and y arrays runs each
+    * vertex's series once. */
+  private def reproject(df: DataFrame, xs: String, ys: String, epsg: Int,
+                        rings: Boolean = false): DataFrame =
+    if (epsg == 5179) df
+    else {
+      def verts(vx: Column, vy: Column): Column =
+        if (epsg == 4326) zip_with(vx, vy, (x, y) => Proj.forward(x, y))
+        else Proj.transformAll(vx, vy, Proj.epsg(epsg), Proj.Epsg5179)
+      def split(f: String): Column =
+        if (rings) transform(col("_rp"), r => transform(r, v => v.getField(f)))
+        else transform(col("_rp"), v => v.getField(f))
+      df.withColumn("_rp",
+          if (rings) zip_with(col(xs), col(ys), verts) else verts(col(xs), col(ys)))
+        .withColumn(xs, split("x"))
+        .withColumn(ys, split("y"))
+        .drop("_rp")
+    }
+
   /** Shared native-parse entry for the single-kind ingest paths: the
     * `wkt_parts` kernel (one compiled static call — the same parser
     * `geometries` runs) behind a cheap prefix guard that keeps each
@@ -111,22 +134,12 @@ object Wkt {
       .otherwise(fail(
         "POLYGON (single exterior ring, >= 4 points incl. closing vertex)",
         col(wktCol)))
-    val proj = epsg match {
-      case 5179 => ring
-      case _ =>
-        // reproject vertex-wise with the same column series; zip_with
-        // pairs xs/ys so each vertex projects exactly once
-        val prj = zip_with(ring.getField("xs"), ring.getField("ys"),
-          (vx, vy) => toRef(struct(vx.as("x"), vy.as("y")), epsg))
-        struct(transform(prj, v => v.getField("x")).as("xs"),
-          transform(prj, v => v.getField("y")).as("ys"))
-    }
-    nativeParts(df, wktCol, "POLYGON",
+    reproject(nativeParts(df, wktCol, "POLYGON",
         "POLYGON (single exterior ring, >= 4 points incl. closing vertex)")
-      .withColumn("_ring", proj)
+      .withColumn("_ring", ring)
       .withColumn("xs", col("_ring.xs"))
       .withColumn("ys", col("_ring.ys"))
-      .drop("_parts", "_pi", "_part", "_ring")
+      .drop("_parts", "_pi", "_part", "_ring"), "xs", "ys", epsg)
   }
 
   /** Ingest a LINESTRING WKT column: adds vertex arrays `xs`, `ys`
@@ -140,33 +153,11 @@ object Wkt {
   private[graft] def linesStage(df: DataFrame, wktCol: String,
                                 epsg: Int): DataFrame = {
     val line = element_at(col("_part"), 1)
-    val proj = epsg match {
-      case 5179 => line
-      case _ =>
-        val prj = zip_with(line.getField("xs"), line.getField("ys"),
-          (vx, vy) => toRef(struct(vx.as("x"), vy.as("y")), epsg))
-        struct(transform(prj, v => v.getField("x")).as("xs"),
-          transform(prj, v => v.getField("y")).as("ys"))
-    }
-    nativeParts(df, wktCol, "LINESTRING", "LINESTRING (>= 2 points)")
-      .withColumn("_line", proj)
+    reproject(nativeParts(df, wktCol, "LINESTRING", "LINESTRING (>= 2 points)")
+      .withColumn("_line", line)
       .withColumn("xs", col("_line.xs"))
       .withColumn("ys", col("_line.ys"))
-      .drop("_parts", "_pi", "_part", "_line")
-  }
-
-  /** Reproject a parsed ring set struct(rxs, rys) vertex-wise. */
-  private def projRings(rs: Column, epsg: Int): Column = epsg match {
-    case 5179 => rs
-    case _ =>
-      val prj = zip_with(rs.getField("rxs"), rs.getField("rys"),
-        (xa, ya) => zip_with(xa, ya,
-          (vx, vy) => toRef(struct(vx.as("x"), vy.as("y")), epsg)))
-      struct(
-        transform(prj, ring => transform(ring, v => v.getField("x")))
-          .as("rxs"),
-        transform(prj, ring => transform(ring, v => v.getField("y")))
-          .as("rys"))
+      .drop("_parts", "_pi", "_part", "_line"), "xs", "ys", epsg)
   }
 
   /** Ingest a full POLYGON WKT column (holes allowed): adds nested
@@ -180,14 +171,10 @@ object Wkt {
   /** `polygonsRings` without its checkpoint fence (plan-audit hook). */
   private[graft] def polygonsRingsStage(df: DataFrame, wktCol: String,
                                         epsg: Int): DataFrame = {
-    val rs = projRings(struct(
-      transform(col("_part"), r => r.getField("xs")).as("rxs"),
-      transform(col("_part"), r => r.getField("ys")).as("rys")), epsg)
-    nativeParts(df, wktCol, "POLYGON", "POLYGON (ring list)")
-      .withColumn("_rs", rs)
-      .withColumn("rxs", col("_rs.rxs"))
-      .withColumn("rys", col("_rs.rys"))
-      .drop("_parts", "_pi", "_part", "_rs")
+    reproject(nativeParts(df, wktCol, "POLYGON", "POLYGON (ring list)")
+      .withColumn("rxs", transform(col("_part"), r => r.getField("xs")))
+      .withColumn("rys", transform(col("_part"), r => r.getField("ys")))
+      .drop("_parts", "_pi", "_part"), "rxs", "rys", epsg, rings = true)
   }
 
   /** Ingest a MULTIPOLYGON WKT column: one row PER PART with nested
@@ -205,15 +192,7 @@ object Wkt {
       .withColumn("part_idx", col("_pi") + 1)
       .withColumn("rxs", transform(col("_part"), r => r.getField("xs")))
       .withColumn("rys", transform(col("_part"), r => r.getField("ys")))
-    val reproj =
-      if (epsg == 5179) split
-      else split
-        .withColumn("_rp", projRings(
-          struct(col("rxs").as("rxs"), col("rys").as("rys")), epsg))
-        .withColumn("rxs", col("_rp.rxs"))
-        .withColumn("rys", col("_rp.rys"))
-        .drop("_rp")
-    reproj
+    reproject(split, "rxs", "rys", epsg, rings = true)
       .drop("_parts", "_pi", "_part")
   }
 
@@ -265,15 +244,7 @@ object Wkt {
       // cheap splits over the landed struct array — no parse subtree
       .withColumn("rxs", transform(col("_part"), r => r.getField("xs")))
       .withColumn("rys", transform(col("_part"), r => r.getField("ys")))
-    val reproj =
-      if (epsg == 5179) projected
-      else projected
-        .withColumn("_rp", projRings(
-          struct(col("rxs").as("rxs"), col("rys").as("rys")), epsg))
-        .withColumn("rxs", col("_rp.rxs"))
-        .withColumn("rys", col("_rp.rys"))
-        .drop("_rp")
-    reproj
+    reproject(projected, "rxs", "rys", epsg, rings = true)
       .withColumn("x",
         when(col("geom_type") === "point", col("rxs")(0)(0)))
       .withColumn("y",

@@ -35,8 +35,7 @@ object LangModel {
   def scoreUnigram(docsDf: DataFrame, minCount: Int = 2): DataFrame = {
     // consume a precomputed token column when the caller passes the
     // docToks artifact; fall back to splitting for arbitrary frames
-    val tokCol =
-      if (docsDf.columns.contains("toks")) col("toks") else Text.toks
+    val tokCol = Text.toksOf(docsDf)
     val w = docsDf.select(col("doc_id"), explode(tokCol).as("w"))
     val vocab = w.groupBy("w").agg(count(lit(1)).as("c"))
     // shuffle_hash: the vocab must NEVER ride a broadcast — at web scale

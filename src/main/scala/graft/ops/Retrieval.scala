@@ -21,7 +21,10 @@ object Retrieval {
   // table every text query reads instead of re-scanning + re-splitting
   private def docs(s: SparkSession, dir: String) = Text.docToks(s, dir)
 
-  private val toks = Text.toks
+  // docToks' pinned token array and count: every frame below that
+  // reads them is docs(s, dir), so nothing re-splits `text`
+  private val toks = col("toks")
+  private val nTok = col("n_tok")
 
   /** The fixed lexical query for the registered retrieval queries —
     * mixed-df terms so idf actually spreads. */
@@ -52,9 +55,9 @@ object Retrieval {
     * corpus, today's crawl scored against them). */
   private[graft] def bm25Stats(s: SparkSession, dir: String): DataFrame =
     graft.Artifacts.frozen(s, ("retrieval.bm25Stats", dir)) {
-      val d = docs(s, dir).select(col("doc_id"), size(toks).as("dl"))
+      val d = docs(s, dir).select(col("doc_id"), nTok.as("dl"))
       val hits = docs(s, dir)
-        .select(col("doc_id"), size(toks).as("dl"), explode(toks).as("w"))
+        .select(col("doc_id"), nTok.as("dl"), explode(toks).as("w"))
         .filter(col("w").isin(QTerms: _*))
         .groupBy("doc_id", "dl", "w").agg(count(lit(1)).as("tf"))
       val stats = broadcast(d.agg(count(lit(1)).as("n"),
@@ -76,7 +79,7 @@ object Retrieval {
 
   private[graft] def bm25Scores(s: SparkSession, dir: String): DataFrame = {
     val hits = docs(s, dir)
-      .select(col("doc_id"), size(toks).as("dl"), explode(toks).as("w"))
+      .select(col("doc_id"), nTok.as("dl"), explode(toks).as("w"))
       .filter(col("w").isin(QTerms: _*))
       .groupBy("doc_id", "dl", "w").agg(count(lit(1)).as("tf"))
     hits.join(broadcast(bm25Stats(s, dir)), "w")
@@ -204,11 +207,12 @@ object Retrieval {
     *  - alpha: fewer than 80% of words contain a letter
     *  - sym: more than 10% of words are symbol marks (#, ...)
     * One corpus pass, one map-side-combined aggregate on source. */
-  /** The five Gopher VIOLATION predicates over a `text` column — ONE
-    * definition shared by the registered report and the fluent
-    * CorpusPipeline.gopherFilter step, so the two cannot drift. */
-  private[graft] def gopherRules: Seq[(String, org.apache.spark.sql.Column)] = {
-    val t = Text.toks
+  /** The five Gopher VIOLATION predicates over a `text` column and its
+    * token array `t` — ONE definition shared by the registered report
+    * and the fluent CorpusPipeline.gopherFilter step, so the two cannot
+    * drift. */
+  private[graft] def gopherRules(t: org.apache.spark.sql.Column)
+      : Seq[(String, org.apache.spark.sql.Column)] = {
     val dl = size(t)
     val wc = length(col("text")) - (size(t) - 1)
     val stops = array(Seq("the", "a", "of", "and", "to", "in").map(lit): _*)
@@ -224,7 +228,7 @@ object Retrieval {
 
   def textGopher(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir).select(
-      col("source") +: gopherRules.map { case (n, c) => c.as(n) }: _*)
+      col("source") +: gopherRules(toks).map { case (n, c) => c.as(n) }: _*)
     def cnt(c: String) = sum(when(col(c), 1L).otherwise(0L)).as(c)
     d.groupBy("source")
       .agg(count(lit(1)).as("n_docs"), cnt("v_nwords"), cnt("v_meanlen"),

@@ -11,6 +11,12 @@ object Text {
   /** Whitespace tokens of the `text` column. */
   val toks: Column = split(col("text"), " ")
 
+  /** The token array of `df`: its `toks` column when it carries one (a
+    * `docToks` frame, or a corpus chain no step has rewritten — steps
+    * that rewrite `text` drop it), else `toks` split from `text`. */
+  def toksOf(df: DataFrame): Column =
+    if (df.columns.contains("toks")) col("toks") else toks
+
   /** SESSION-FROZEN ARTIFACT (the ivfAssign / bm25Stats pattern): the
     * TOKENIZED corpus base table — documents plus their whitespace
     * token array and token count, fanned out, checkpointed and pinned

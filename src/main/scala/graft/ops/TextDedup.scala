@@ -29,8 +29,10 @@ object TextDedup {
   // table every text query reads instead of re-scanning + re-splitting
   private def docs(s: SparkSession, dir: String) = Text.docToks(s, dir)
 
-  private val toks = Text.toks
-  private def grams(n: Int): Column = Text.grams(n)
+  // docToks' pinned token array and count: every frame below that
+  // reads them is docs(s, dir), so nothing re-splits `text`
+  private val toks = col("toks")
+  private val nTok = col("n_tok")
 
   /** Distinct hashed shingles: (doc_id, hs). All self-joins run on the
     * 8-byte hash, not the string — same pairs (64-bit collisions are
@@ -263,8 +265,8 @@ object TextDedup {
 
   /** Shingle-hash array for the incremental-dedup family (3-gram
     * xxhash64, distinct) — shared with the streaming twin. */
-  private[graft] def harrOf: Column =
-    call_function("shingle_hashes", toks, lit(3))
+  private[graft] def harrOf(t: Column): Column =
+    call_function("shingle_hashes", t, lit(3))
 
   /** SESSION-FROZEN ARTIFACT (the ivfAssign / bm25Stats pattern): the
     * EXISTING corpus side's shingle arrays and LSH band buckets — the
@@ -279,7 +281,7 @@ object TextDedup {
     graft.Artifacts.frozen(s, ("textDedup.incIndex", dir)) {
       val harr = graft.Artifacts.pin(
         docs(s, dir).filter(col("doc_id") % 4 =!= 0)
-          .select(col("doc_id"), harrOf.as("harr")))
+          .select(col("doc_id"), harrOf(toks).as("harr")))
       IncIndex(harr, graft.Artifacts.pin(packedBandKeys(harr, Seq("doc_id"))))
     }
 
@@ -287,7 +289,7 @@ object TextDedup {
     val idx = incIndex(s, dir)
     val base = Tables.hot(
       docs(s, dir).filter(col("doc_id") % 4 === 0)
-        .select(col("doc_id"), harrOf.as("harr")))
+        .select(col("doc_id"), harrOf(toks).as("harr")))
     val incoming = packedBandKeys(base, Seq("doc_id"))
       .select(col("key"), col("doc_id").as("da"))
     val existing = idx.buckets
@@ -443,7 +445,7 @@ object TextDedup {
   def textTokens(s: SparkSession, dir: String): DataFrame =
     docs(s, dir).select(
         col("doc_id"),
-        size(toks).as("n_ws"),
+        nTok.as("n_ws"),
         size(expr("regexp_extract_all(text, '[a-z]+', 0)")).as("n_alpha"),
         length(col("text")).as("n_chars_m"))
       .orderBy("doc_id")
@@ -459,12 +461,12 @@ object TextDedup {
   def textQuality(s: SparkSession, dir: String): DataFrame =
     docs(s, dir).select(
         col("doc_id"),
-        size(toks).as("n_words"),
+        nTok.as("n_words"),
         (size(filter(toks, w => w.isin("the", "a"))).cast("double") /
-          size(toks)).as("stop_ratio"),
+          nTok).as("stop_ratio"),
         (length(regexp_replace(col("text"), " ", "")).cast("double") /
-          size(toks)).as("avg_word_len"),
-        (size(array_distinct(toks)).cast("double") / size(toks))
+          nTok).as("avg_word_len"),
+        (size(array_distinct(toks)).cast("double") / nTok)
           .as("type_token_ratio"))
       .orderBy("doc_id")
 

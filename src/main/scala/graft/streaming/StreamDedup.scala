@@ -59,7 +59,7 @@ object StreamDedup {
 
     val baseDocs = graft.Tables.load(spark, dir, "documents")
       .filter(!isNew)
-      .select(col("doc_id"), TextDedup.harrOf.as("harr"))
+      .select(col("doc_id"), TextDedup.harrOf(graft.ops.Text.toks).as("harr"))
     val baseIdx = graft.Tables.hot(
       TextDedup.packedBandKeys(baseDocs, Seq("doc_id", "harr"))
         .select(col("key"), col("doc_id").as("db"),
@@ -67,7 +67,7 @@ object StreamDedup {
 
     val incoming = readDocs(spark, dir)
       .filter(isNew)
-      .select(col("doc_id"), TextDedup.harrOf.as("harr"))
+      .select(col("doc_id"), TextDedup.harrOf(graft.ops.Text.toks).as("harr"))
     val keyed = TextDedup.packedBandKeys(incoming, Seq("doc_id", "harr"))
       .select(col("doc_id"), col("harr"), col("key"))
     val nullSig = incoming

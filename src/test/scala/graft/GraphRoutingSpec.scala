@@ -17,6 +17,7 @@ class GraphRoutingSpec extends SparkSpec {
   private val routedKeys: Seq[(String, (org.apache.spark.sql.SparkSession, String) => DataFrame)] =
     Seq[(String, (org.apache.spark.sql.SparkSession, String) => DataFrame)](
       ("graph_pagerank", SparkEntry.queries("graph_pagerank")),
+      ("graph_communities", SparkEntry.queries("graph_communities")),
       ("graph_triangles", SparkEntry.queries("graph_triangles")),
       ("graph_edge_overlap", SparkEntry.queries("graph_edge_overlap")),
       ("graph_kcore(k=2)", (s, d) => graft.ops.Graph.graphKcore(s, d, k = 2)),

@@ -50,11 +50,10 @@ class PairCodesSpec extends SparkSpec {
         call_function("pair_codes", col("a"), lit(10))))
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(a1 == a2)
-    val bad = intercept[Exception] {
+    val bad = intercept[org.apache.spark.sql.AnalysisException] {
       df.select(call_function("pair_codes", col("a"), lit(3), lit(4)))
         .collect()
     }
-    assert(bad.getMessage.contains("pair_codes expects") ||
-      Option(bad.getCause).exists(_.getMessage.contains("pair_codes expects")))
+    assert(bad.getCondition.startsWith("WRONG_NUM_ARGS"), bad.getMessage)
   }
 }
