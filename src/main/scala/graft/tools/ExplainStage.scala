@@ -18,8 +18,6 @@ import org.apache.spark.sql.functions._
 object ExplainStage {
   def main(args: Array[String]): Unit = {
     val dir = args.head
-    val spark =
-      graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     import graft.geo.{Derive, Wkt}
 
     def polyWkt(s: SparkSession): DataFrame =
@@ -41,6 +39,9 @@ object ExplainStage {
         graft.ops.GeoQueries.multiPolyWktText(s, dir), "wkt", 5179)),
       "wkt_geometries" -> (s => Wkt.geometriesStage(pointWkt(s), "wkt", 5179)))
 
+    val unknown = args.tail.filterNot(stages.contains)
+    require(unknown.isEmpty, s"unknown stage(s): ${unknown.mkString(", ")}")
+    val spark = graft.SparkEntry.harnessSession()
     args.tail.foreach { name =>
       println(s"==== stage $name ====")
       stages(name)(spark).explain("formatted")

@@ -29,8 +29,10 @@ import graft.Tables
   */
 object ScaleData {
 
-  private def replicate(df: DataFrame, copies: Int,
-                        shifts: Map[String, Long]): DataFrame = {
+  /** `copies` copies of `df`, numbered by a `_copy` column, with each
+    * `shifts` key column moved by `_copy × span`. */
+  def replicate(df: DataFrame, copies: Int,
+                shifts: Map[String, Long]): DataFrame = {
     val base = df.withColumn("_copy",
       explode(sequence(lit(0L), lit(copies - 1L))))
     shifts.foldLeft(base) { case (d, (c, span)) =>
@@ -42,9 +44,7 @@ object ScaleData {
     val srcDir = args(0)
     val outDir = args(1)
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.harnessSession()
 
     def write(name: String, df: DataFrame): Unit = {
       df.drop("_copy").write.mode("overwrite")

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SparkEntry, Tables}
 
 /** 10× scale smoke for the ROUTED iterative paths (VERDICT r13 task 5):
   * replicate the sf0.1 tables ~10× with key-shifted disjoint copies,
@@ -18,7 +18,11 @@ import graft.Tables
   *   (b) the scale-critical plan pins hold on the SCALED plans — no
   *       CartesianProduct, no corpus-sized BroadcastExchange above the
   *       bound (the PlanAuditSpec assertions re-checked at 10×);
-  *   (c) the queries complete and return sane row counts.
+  *   (c) the queries complete and return sane row counts; a failed
+  *       query fails the smoke.
+  *
+  * Each query is one [[SparkEntry.run]], so its checkpoints are
+  * released before the next one starts.
   *
   * Usage: tools/run.sh graft.tools.ScaleSmoke /root/testdata/sf0.1 /tmp/scale10
   * Output is committed per round as SCALE_SMOKE_r{N}.txt.
@@ -26,32 +30,22 @@ import graft.Tables
 object ScaleSmoke {
   private val Copies = 10
 
-  private def replicate(df: DataFrame, shifts: Map[String, Long]): DataFrame = {
-    val c = explode(sequence(lit(0L), lit(Copies - 1L))).as("_copy")
-    val base = df.select(col("*")).withColumn("_copy", c)
-    shifts.foldLeft(base) { case (d, (colName, span)) =>
-      d.withColumn(colName, col(colName) + col("_copy") * span)
-    }.drop("_copy")
-  }
-
   def main(args: Array[String]): Unit = {
     val srcDir = args(0)
     val outDir = args(1)
-    val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    import spark.implicits._
+    val spark = SparkEntry.harnessSession()
 
     // disjoint key-shifted copies: the co-purchase graph gains 10x
     // vertices AND 10x edges (orders and parts both shift); documents
     // gain 10x docs. Spans clear each table's key range at sf<=1.
     val li = Tables.load(spark, srcDir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
-    replicate(li, Map("l_orderkey" -> 100000000L, "l_partkey" -> 10000000L,
-        "l_suppkey" -> 1000000L))
-      .write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
+    ScaleData.replicate(li, Copies, Map("l_orderkey" -> 100000000L,
+        "l_partkey" -> 10000000L, "l_suppkey" -> 1000000L))
+      .drop("_copy").write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
     val docs = Tables.load(spark, srcDir, "documents")
-    replicate(docs, Map("doc_id" -> 10000000L))
-      .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
+    ScaleData.replicate(docs, Copies, Map("doc_id" -> 10000000L))
+      .drop("_copy").write.mode("overwrite").parquet(s"$outDir/documents.parquet")
     // customer ids INTERLEAVE (k*10 + copy) instead of shifting:
     // q_hier_rollup_edges derives parent(k) from the id closed form,
     // so the scaled id space must stay CONTIGUOUS from the root for
@@ -60,8 +54,7 @@ object ScaleSmoke {
     // is itself a useful negative certification of the loud path)
     val cust = Tables.load(spark, srcDir, "customer")
       .select(col("c_custkey"), col("c_acctbal"))
-    cust.withColumn("_copy",
-        explode(sequence(lit(0L), lit(Copies - 1L))))
+    ScaleData.replicate(cust, Copies, Map.empty)
       .withColumn("c_custkey", col("c_custkey") * Copies + col("_copy"))
       .drop("_copy")
       .write.mode("overwrite").parquet(s"$outDir/customer.parquet")
@@ -94,14 +87,18 @@ object ScaleSmoke {
         s"(nodes=${all.size}, cartesian=false)")
     }
 
+    // a 10x query on a few cores can outrun Bench's and Verify's caps;
+    // this one only stops a wedge
+    val cap = SparkEntry.queryCap(1800)
     def run(name: String): Unit = {
-      val t0 = System.nanoTime()
-      val df = graft.SparkEntry.queries(name)(spark, outDir)
-      pinCheck(name, df)
-      val n = df.count()
-      val secs = (System.nanoTime() - t0) / 1e9
+      var n = 0L
+      val r = SparkEntry.run(spark, name, SparkEntry.queries(name)(spark, outDir), cap) { df =>
+        pinCheck(name, df)
+        n = df.count()
+      }
+      r.failure.foreach(e => throw e)
       assert(n > 0, s"$name: empty result at 10x scale")
-      println(f"[scale] $name%-22s rows=$n%8d wall=$secs%7.2f s")
+      println(f"[scale] $name%-22s rows=$n%8d wall=${r.wallS}%7.2f s")
     }
 
     Seq("graph_pagerank", "graph_kcore", "dedup_incremental",

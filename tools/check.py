@@ -14,6 +14,10 @@ for t in ["region","nation","customer","supplier","part","orders",
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+if not oracle:
+    # an empty dump checks nothing; it must not read as a pass
+    print(f"FAIL: no queries to check in {outdir}/oracle_sql.json")
+    sys.exit(1)
 fails = 0
 for name, sql in sorted(oracle.items()):
     try:
