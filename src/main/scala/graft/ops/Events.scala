@@ -1,40 +1,39 @@
 package graft.ops
 
 import graft.{QueryDef, Tables}
+import graft.api.EventPipeline
 import graft.QueryDef.dsum
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Event-stream batch operators: sessionization, as-of join, tumbling
-  * windows. These are the batch twins of the Structured Streaming path
+/** Event-stream batch operators: sessionization, the ordered funnel
+  * and retention cohorts, as-of and range joins, tumbling windows, CDC
+  * compaction / SCD2 / snapshot diff, cohort LTV and new-vs-returning.
+  * These are the batch twins of the Structured Streaming path
   * (graft.streaming); both compute identical results so the streaming
   * specs assert equality against these plans.
+  *
+  * q_sessionize, q_funnel_window and q_retention run their
+  * `api.EventPipeline` step (withSessions, withFunnel, withRetention)
+  * plus a projection; steps and window constants live there only.
   *
   * Timestamps are surfaced as epoch-microsecond BIGINTs at the oracle
   * boundary — integer-exact across engines and parquet timestamp units.
   */
 object Events {
 
-  val SessionGapUs: Long = 30L * 60 * 1000 * 1000 // 30 min
-
-  /** Gap-based sessionization: lag → new-session flag → running count.
-    * One shuffle on user_id; both windows share the exchange+sort.
+  /** Gap-based sessionization: `EventPipeline.withSessions` (lag →
+    * new-session flag → running count; one shuffle on user_id, both
+    * windows share the exchange+sort), aggregated per session.
     */
-  def sessionize(s: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    Tables.loadEventsUs(s, dir)
-      .withColumn("prev_us", lag(col("ts_us"), 1).over(byUser))
-      .withColumn("is_start",
-        when(col("prev_us").isNull ||
-             col("ts_us") - col("prev_us") > SessionGapUs, 1).otherwise(0))
-      .withColumn("session_id", sum(col("is_start")).over(byUser))
+  def sessionize(s: SparkSession, dir: String): DataFrame =
+    EventPipeline.load(s, dir).withSessions().df
       .groupBy("user_id", "session_id")
       .agg(count(lit(1)).as("n_events"),
            min(col("ts_us")).as("session_start_us"),
            max(col("ts_us")).as("session_end_us"))
       .orderBy("user_id", "session_id")
-  }
 
   val sessionizeSql: String = s"""
     WITH flagged AS (
@@ -44,7 +43,7 @@ object Events {
       FROM events),
     marked AS (
       SELECT user_id, event_id, ts_us,
-        CASE WHEN prev_us IS NULL OR ts_us - prev_us > ${SessionGapUs}
+        CASE WHEN prev_us IS NULL OR ts_us - prev_us > ${EventPipeline.SessionGapUs}
              THEN 1 ELSE 0 END AS is_start
       FROM flagged),
     sess AS (
@@ -120,13 +119,15 @@ object Events {
 
   /** Weekly retention cohorts: users bucketed by first-seen week,
     * counted per (cohort, active-week) — the classic retention matrix
-    * in long form. Weeks are epoch-µs integer buckets (7-day). */
+    * in long form. Weeks are epoch-µs integer buckets (7-day). The
+    * cohort is the week of `EventPipeline.withRetention`'s first-seen
+    * window, not a first-seen aggregate joined back: week flooring is
+    * monotone, so the week of the first event is the first week. */
   def retention(s: SparkSession, dir: String): DataFrame = {
-    val WeekUs = 7L * 86400 * 1000000
-    val e = Tables.loadEventsUs(s, dir)
-      .select(col("user_id"), (col("ts_us") - col("ts_us") % WeekUs).as("week_us"))
-    val firstSeen = e.groupBy("user_id").agg(min("week_us").as("cohort_us"))
-    e.join(firstSeen, Seq("user_id"))
+    def week(us: Column) = us - us % EventPipeline.RetentionPeriodUs
+    EventPipeline.load(s, dir).withRetention().df
+      .select(col("user_id"), week(col("_first_ts")).as("cohort_us"),
+        week(col("ts_us")).as("week_us"))
       .groupBy("cohort_us", "week_us")
       .agg(countDistinct("user_id").as("active_users"))
       .orderBy("cohort_us", "week_us")
@@ -386,40 +387,22 @@ object Events {
   /** Time-bounded ORDERED funnel — the windowFunnel class of engines
     * like ClickHouse (q_funnel counts step membership; this one
     * demands view → click → purchase in event order with the whole
-    * chain inside a 24 h window of its opening view). Two chained
-    * running-max windows over ONE per-user sort resolve the chain
-    * without any self-join or per-user collect: at each click, the
-    * latest earlier view; at each purchase, the best (latest) view
-    * among valid earlier clicks — if any chain fits the window, the
-    * max-view chain fits. The oracle replays the identical window
+    * chain inside a 24 h window of its opening view). The two chained
+    * running-max windows of `EventPipeline.withFunnel` over ONE
+    * per-user sort resolve the chain without any self-join or per-user
+    * collect: at each click, the latest earlier view; at each purchase,
+    * the best (latest) view among valid earlier clicks — if any chain
+    * fits the window, the max-view chain fits. The user's level is the
+    * max of its row steps (the oracle's greatest of per-level maxima:
+    * the same number). The oracle replays the identical window
     * construction, so semantics match by construction. Scale shape:
     * one hash exchange on user, one sort, both windows share it. */
-  def funnelWindow(s: SparkSession, dir: String): DataFrame = {
-    val winUs = 24L * 3600L * 1000000L
-    val w = Window.partitionBy("user_id")
-      .orderBy("ts_us", "event_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val e = Tables.loadEventsUs(s, dir)
-      .select("user_id", "event_id", "ts_us", "event_type")
-      .withColumn("lv",
-        max(when(col("event_type") === "view", col("ts_us"))).over(w))
-      .withColumn("lvc",
-        max(when(col("event_type") === "click" &&
-          col("lv").isNotNull && col("lv") < col("ts_us"), col("lv")))
-          .over(w))
-    e.groupBy("user_id")
-      .agg(greatest(
-        max(when(col("event_type") === "view", 1).otherwise(0)),
-        max(when(col("event_type") === "click" &&
-          col("lv").isNotNull && col("lv") < col("ts_us"), 2)
-          .otherwise(0)),
-        max(when(col("event_type") === "purchase" &&
-          col("lvc").isNotNull &&
-          col("ts_us") - col("lvc") <= winUs, 3).otherwise(0)))
-        .as("funnel_level"))
+  def funnelWindow(s: SparkSession, dir: String): DataFrame =
+    EventPipeline.load(s, dir).withFunnel().df
+      .groupBy("user_id")
+      .agg(max(col("funnel_step")).as("funnel_level"))
       .filter(col("funnel_level") >= 1)
       .orderBy("user_id")
-  }
 
   val funnelWindowSql: String = s"""
     WITH ev AS (
@@ -445,7 +428,7 @@ object Events {
         MAX(CASE WHEN event_type = 'click' AND lv IS NOT NULL
                   AND lv < ts_us THEN 2 ELSE 0 END),
         MAX(CASE WHEN event_type = 'purchase' AND lvc IS NOT NULL
-                  AND ts_us - lvc <= ${24L * 3600L * 1000000L}
+                  AND ts_us - lvc <= ${EventPipeline.FunnelChainUs}
              THEN 3 ELSE 0 END)) AS funnel_level
     FROM lv2
     GROUP BY user_id
@@ -454,7 +437,7 @@ object Events {
         MAX(CASE WHEN event_type = 'click' AND lv IS NOT NULL
                   AND lv < ts_us THEN 2 ELSE 0 END),
         MAX(CASE WHEN event_type = 'purchase' AND lvc IS NOT NULL
-                  AND ts_us - lvc <= ${24L * 3600L * 1000000L}
+                  AND ts_us - lvc <= ${EventPipeline.FunnelChainUs}
              THEN 3 ELSE 0 END)) >= 1
     ORDER BY user_id"""
 
@@ -506,6 +489,13 @@ object Events {
              ROWS UNBOUNDED PRECEDING) AS DOUBLE), 4) AS cum_revenue
     FROM m ORDER BY cohort_wk, age_wk"""
 
+  /** One row per (user_id, active epoch day): the activity rollup
+    * q_new_vs_returning and q_dau_stickiness start from. */
+  private[ops] def userDays(s: SparkSession, dir: String): DataFrame =
+    Tables.loadEventsUs(s, dir)
+      .select(col("user_id"), expr("ts_us DIV 86400000000").as("day"))
+      .distinct()
+
   /** Daily new-vs-returning split: per day, distinct active users
     * partitioned into first-ever-seen (new) and returning — the
     * growth-accounting companion to q_retention. One (user, day) dedup,
@@ -513,9 +503,7 @@ object Events {
     * daily aggregate; all counts exact integers.
     */
   def newVsReturning(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.loadEventsUs(s, dir)
-      .select(col("user_id"), expr("ts_us DIV 86400000000").as("day"))
-      .distinct()
+    val daily = userDays(s, dir)
     val first = daily.groupBy("user_id").agg(min(col("day")).as("fd"))
     daily.join(first.hint("shuffle_hash"), "user_id")
       .groupBy("day")

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryDef, Tables}
+import graft.api.EventPipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -238,39 +239,22 @@ object Journey {
   /** Last-touch revenue attribution: every purchase credits its value
     * to the most recent click/view by the same user within 24 h (else
     * 'none') — the marketing-attribution operator behind channel ROI
-    * reports. The carried touch rides ONE per-user window (two
-    * last_value(ignoreNulls) columns sharing the same sort/exchange —
-    * no self-join, no per-purchase scan-back), then one conditional
-    * hash aggregate; revenue sums are decimal-routed (QueryDef.dsum
-    * policy). The same window construction is stated in the oracle, so
-    * hash equality certifies the carry semantics including the
-    * same-instant tie order (t, event_id).
+    * reports. The carried touch is `EventPipeline.withAttribution`:
+    * ONE per-user window (two last_value(ignoreNulls) columns sharing
+    * the same sort/exchange — no self-join, no per-purchase scan-back),
+    * then one conditional hash aggregate over the purchases; revenue
+    * sums are decimal-routed (QueryDef.dsum policy). The same window
+    * construction is stated in the oracle, so hash equality certifies
+    * the carry semantics including the same-instant tie order
+    * (t, event_id).
     */
-  def attribution(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val isTouch = col("event_type").isin("click", "view")
-    Tables.loadEventsUs(s, dir)
-      .select(col("user_id"), col("ts_us"), col("event_id"),
-        col("event_type"), col("value"))
-      // both carried columns in ONE select: a withColumn chain would
-      // interleave a Project and keep CollapseWindow from fusing them
-      .select(col("event_type"), col("ts_us"), col("value"),
-        last(when(isTouch, col("ts_us")), ignoreNulls = true).over(w)
-          .as("lt_ts"),
-        last(when(isTouch, col("event_type")), ignoreNulls = true).over(w)
-          .as("lt_type"))
+  def attribution(s: SparkSession, dir: String): DataFrame =
+    EventPipeline.load(s, dir).withAttribution().df
       .filter(col("event_type") === "purchase")
-      .select(
-        when(col("lt_ts").isNotNull &&
-          col("ts_us") - col("lt_ts") <= 86400000000L, col("lt_type"))
-          .otherwise("none").as("touch"),
-        col("value"))
       .groupBy("touch")
       .agg(count(lit(1)).as("n_purchases"),
         round(QueryDef.dsum(col("value"), 6), 4).as("revenue"))
       .orderBy("touch")
-  }
 
   val attributionSql: String = """
     WITH ev AS (
@@ -304,10 +288,7 @@ object Journey {
     * pieces.
     */
   def eventsPipeline(s: SparkSession, dir: String): DataFrame =
-    graft.api.EventPipeline(Tables.loadEventsUs(s, dir)
-        .select(col("user_id"), col("ts_us"), col("event_id"),
-          col("event_type"), col("value")))
-      .withSessions().withAttribution().userSummary()
+    EventPipeline.load(s, dir).withSessions().withAttribution().userSummary()
 
   /** The fluent chain at full width: sessions + attribution + funnel +
     * retention composed into the SAME single-exchange plan — the two
@@ -316,9 +297,7 @@ object Journey {
     * the window's hash partitioning (PlanAuditSpec pins exactly one
     * exchange for this plan too). */
   def eventsPipelineFull(s: SparkSession, dir: String): DataFrame =
-    graft.api.EventPipeline(Tables.loadEventsUs(s, dir)
-        .select(col("user_id"), col("ts_us"), col("event_id"),
-          col("event_type"), col("value")))
+    EventPipeline.load(s, dir)
       .withSessions().withAttribution().withFunnel().withRetention()
       .userSummary()
 
@@ -440,9 +419,7 @@ object Journey {
     * integers, rounded at 6 dp.
     */
   def dauStickiness(s: SparkSession, dir: String): DataFrame = {
-    val ud = Tables.loadEventsUs(s, dir)
-      .select(col("user_id"), expr("ts_us DIV 86400000000").as("day"))
-      .distinct()
+    val ud = Events.userDays(s, dir)
     val span = ud.agg(max(col("day")).as("max_day"))
     val dau = ud.groupBy("day").agg(count(lit(1)).as("dau"))
     def trailing(width: Int, name: String): DataFrame =

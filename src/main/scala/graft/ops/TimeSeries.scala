@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.DecimalType
 object TimeSeries {
 
   private val DayUs = 86400000000L
-  private val SessUs = 1800000000L // 30 min interval per event
+  private[graft] val SessUs = 30L * 60 * 1000000 // 30-min interval per event
 
   /** Max interval concurrency per event type (each event opens a 30-min
     * interval): the sweep-line +1/−1 running sum — but as a DISTRIBUTED

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.ops.Events
+import graft.api.EventPipeline.{FunnelChainUs, NoEvent, SessionGapUs,
+  TouchWindowUs, creditedTouch, isTouch, opensSession}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -10,6 +11,11 @@ import org.apache.spark.sql.types._
   * results, incremental execution. `readStream` over the events parquet
   * directory stands in for any streaming source (Kafka etc. — the
   * transforms don't change).
+  *
+  * The per-user event twins fold with `api.EventPipeline`'s rules,
+  * each defined next to its batch `Column` form: `opensSession`
+  * (sessions, pipelineSummary), `isTouch` + `creditedTouch`
+  * (attributionStream, pipelineSummary), and `FunnelChainUs`.
   *
   * The events timestamp has shipped as INT64 nanos, TIMESTAMP, and
   * TIMESTAMP_NTZ across test-data vintages; `readEvents` takes the
@@ -234,7 +240,6 @@ object EventStream {
     * provably semantics-free. */
   def funnelLevels(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val winUs = 24L * 3600L * 1000000L
     readEvents(spark, dir)
       .select(col("user_id"), col("event_id"), col("ts_us"),
         col("event_type")).as[(Long, Long, Long, String)]
@@ -256,7 +261,7 @@ object EventStream {
                   math.max(st.level, 2))
               case "purchase"
                   if st.bestChainView != Long.MinValue &&
-                    ts - st.bestChainView <= winUs =>
+                    ts - st.bestChainView <= FunnelChainUs =>
                 st = st.copy(level = math.max(st.level, 3))
               case _ => ()
             }
@@ -272,8 +277,6 @@ object EventStream {
   final case class SessionState(start: Long, end: Long, n: Long)
   final case class Session(user_id: Long, session_start_us: Long,
                            session_end_us: Long, n_events: Long)
-
-  val GapUs: Long = Events.SessionGapUs
 
   /** Gap-based sessions via flatMapGroupsWithState: closed sessions are
     * emitted as soon as a later event proves the gap; the open tail
@@ -303,17 +306,15 @@ object EventStream {
             var st = state.getOption.orNull
             val out = Iterator.newBuilder[Session]
             sorted.foreach { t =>
-              st match {
-                case null => st = SessionState(t, t, 1)
-                case s if t - s.end > GapUs =>
-                  out += Session(user, s.start, s.end, s.n)
-                  st = SessionState(t, t, 1)
-                case s => st = SessionState(s.start, t, s.n + 1)
-              }
+              val prevUs = if (st == null) NoEvent else st.end
+              if (opensSession(prevUs, t, SessionGapUs)) {
+                if (st != null) out += Session(user, st.start, st.end, st.n)
+                st = SessionState(t, t, 1)
+              } else st = SessionState(st.start, t, st.n + 1)
             }
             if (st != null) {
               state.update(st)
-              state.setTimeoutTimestamp(st.end / 1000 + GapUs / 1000)
+              state.setTimeoutTimestamp(st.end / 1000 + SessionGapUs / 1000)
             }
             out.result()
           }
@@ -340,7 +341,6 @@ object EventStream {
     */
   def sweepConcurrency(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sessUs = 1800000000L
     readEvents(spark, dir)
       .select(col("event_type"), col("ts_us"), col("event_id"))
       .as[(String, Long, Long)]
@@ -356,7 +356,7 @@ object EventStream {
           var bestT = st.bestT
           rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, ts, _) =>
             while (heap.nonEmpty && heap.head <= ts) { heap.dequeue(); () }
-            heap.enqueue(ts + sessUs)
+            heap.enqueue(ts + graft.ops.TimeSeries.SessUs)
             if (heap.size > best) { best = heap.size.toLong; bestT = ts }
           }
           state.update(SweepState(heap.toArray, best, bestT))
@@ -396,7 +396,6 @@ object EventStream {
   private[graft] def attributionStreamFrom(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val attrUs = 86400000000L
     events
       .select(col("user_id"), col("ts_us"), col("event_id"),
         col("event_type"), col("event_ts"))
@@ -411,25 +410,24 @@ object EventStream {
             state.remove()
             Iterator.empty
           } else {
-            var st = state.getOption.orNull
+            // a null typ: no touch carried yet
+            var st = state.getOption.getOrElse(TouchState(NoEvent, null))
             val out = scala.collection.mutable.ArrayBuffer[AttrOut]()
             rows.toSeq.sortBy(r => (r._2, r._3)).foreach {
               case (_, ts, eid, typ, _) =>
                 if (typ == "purchase") {
-                  val touch =
-                    if (st != null && ts - st.ts <= attrUs) st.typ
-                    else "none"
-                  out += AttrOut(uid, ts, eid, touch)
+                  out += AttrOut(uid, ts, eid,
+                    creditedTouch(st.ts, st.typ, ts, TouchWindowUs))
                 }
-                if (typ == "click" || typ == "view") st = TouchState(ts, typ)
+                if (isTouch(typ)) st = TouchState(ts, typ)
             }
-            if (st != null) {
+            if (st.typ != null) {
               state.update(st)
               // round the deadline UP to the next millisecond: timeouts are
               // ms-grained while ts is µs, and flooring could evict up to
               // 999 µs before touch + window, letting a purchase in that
               // sub-ms tail resolve "none" where batch says the touch type
-              state.setTimeoutTimestamp((st.ts + attrUs + 999) / 1000)
+              state.setTimeoutTimestamp((st.ts + TouchWindowUs + 999) / 1000)
             }
             out.iterator
           }
@@ -592,8 +590,6 @@ object EventStream {
   private[graft] def pipelineSummaryFrom(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val gapUs = GapUs
-    val attrUs = 86400000000L
     def e6(v: Double): Long =
       BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP)
         .underlying.movePointRight(6).longValueExact
@@ -609,32 +605,23 @@ object EventStream {
       .mapGroupsWithState[PipeState, PipeOut](GroupStateTimeout.NoTimeout) {
         case (uid, rows, state) =>
           var st = state.getOption.getOrElse(
-            PipeState(Long.MinValue, 0L, 0L, 0L, Long.MinValue, null,
-              0L, 0L, 0L))
+            PipeState(NoEvent, 0L, 0L, 0L, NoEvent, null, 0L, 0L, 0L))
           rows.toSeq.sortBy(r => (r._2, r._3)).foreach {
             case (_, ts, _, typ, value) =>
-              val newSession =
-                st.lastTs == Long.MinValue || ts - st.lastTs > gapUs
+              val newSession = opensSession(st.lastTs, ts, SessionGapUs)
               var s = st.copy(lastTs = ts,
                 nSessions = st.nSessions + (if (newSession) 1L else 0L),
                 nEvents = st.nEvents + 1)
               if (typ == "purchase") {
-                val touch =
-                  if (s.touchTyp != null && ts - s.touchTs <= attrUs)
-                    s.touchTyp
-                  else "none"
                 val v = e6(value)
-                s = touch match {
-                  case "click" => s.copy(nPurchases = s.nPurchases + 1,
-                    revClickE6 = s.revClickE6 + v)
-                  case "view" => s.copy(nPurchases = s.nPurchases + 1,
-                    revViewE6 = s.revViewE6 + v)
-                  case _ => s.copy(nPurchases = s.nPurchases + 1,
-                    revNoneE6 = s.revNoneE6 + v)
+                s = s.copy(nPurchases = s.nPurchases + 1)
+                s = creditedTouch(s.touchTs, s.touchTyp, ts, TouchWindowUs) match {
+                  case "click" => s.copy(revClickE6 = s.revClickE6 + v)
+                  case "view" => s.copy(revViewE6 = s.revViewE6 + v)
+                  case _ => s.copy(revNoneE6 = s.revNoneE6 + v)
                 }
               }
-              if (typ == "click" || typ == "view")
-                s = s.copy(touchTs = ts, touchTyp = typ)
+              if (isTouch(typ)) s = s.copy(touchTs = ts, touchTyp = typ)
               st = s
           }
           state.update(st)

@@ -740,4 +740,37 @@ class PlanAuditSpec extends SparkSpec {
       }
     } finally spark.conf.unset(graft.ops.Graph.BroadcastVerticesKey)
   }
+
+  test("event report ops keep the EventPipeline step shapes") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    def userHash(ns: Seq[SparkPlan]) = ns.collect {
+      case e: ShuffleExchangeExec
+          if e.outputPartitioning.toString.contains("hashpartitioning") => e
+    }
+    // q_sessionize: the lag window and the running session count ride
+    // one user-hash exchange and one (user_id, ts_us, event_id) sort;
+    // the (user, session) aggregate reuses the partitioning. The final
+    // orderBy(user_id, session_id) sort does not order by ts_us.
+    val ss = collectAll(initialPlan("q_sessionize"))
+    assert(userHash(ss).length == 1,
+      s"q_sessionize: expected one user-hash exchange, got ${userHash(ss).length}")
+    assert(ss.count(_.isInstanceOf[WindowExec]) == 2,
+      "q_sessionize: expected the lag and running-count windows")
+    val ssWindowSorts = ss.collect {
+      case s: SortExec
+          if s.sortOrder.exists(_.child.references.exists(_.name == "ts_us")) => s
+    }
+    assert(ssWindowSorts.length == 1,
+      s"q_sessionize: both windows must share one sort, got ${ssWindowSorts.length}")
+    // q_retention: the cohort comes from withRetention's first-seen
+    // window over the events, not a first-seen aggregate joined back
+    val rt = collectAll(initialPlan("q_retention"))
+    assert(!rt.exists(_.nodeName.contains("Join")),
+      "q_retention: first-seen must not be joined back")
+    assert(rt.exists {
+      case w: WindowExec => w.windowExpression.exists(_.toString.contains("min(ts_us"))
+      case _ => false
+    }, "q_retention: first-seen must come from a window")
+  }
 }

@@ -198,7 +198,7 @@ class EventStreamSpec extends SparkSpec {
       .agg(max("ts_us")).head().getLong(0)
     val watermarkMs = maxTsUs / 1000 - 3600 * 1000
     val stillOpen = lastPerUser.filter { case (_, _, endUs, _) =>
-      endUs / 1000 + EventStream.GapUs / 1000 >= watermarkMs
+      endUs / 1000 + graft.api.EventPipeline.SessionGapUs / 1000 >= watermarkMs
     }
     val expected = all -- stillOpen
     assert(streamed == expected,
