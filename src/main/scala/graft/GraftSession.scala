@@ -1,17 +1,23 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
 
 /** Opinionated SparkSession factory carrying the engine's tuned
   * defaults — what Verify/Bench/specs use, packaged for library users.
   */
-object GraftSession {
+object GraftSession extends Logging {
 
   /** @param cores      local parallelism (also shuffle partitions —
     *                    on a real cluster set shuffle partitions to
     *                    2–3× total executor cores instead)
     */
   def local(cores: Int, extraConf: Map[String, String] = Map.empty): SparkSession = {
+    // load Spark's INFO log4j defaults now, so they can't reset the level
+    initializeLogIfNecessary(false, silent = true)
+    Configurator.setRootLevel(Level.valueOf(sys.env.getOrElse("SPARK_GRAFT_LOG", "WARN")))
     val b = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -40,8 +46,6 @@ object GraftSession {
       // to the first session in the JVM.)
       .config("spark.sql.codegen.cache.maxEntries", "5000")
     extraConf.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOG", "WARN"))
-    s
+    b.getOrCreate()
   }
 }

@@ -1686,11 +1686,12 @@ object Corpus {
   /** The duplicate windows of dedup_substrings (also the
     * CorpusPipeline.dedupSubstrings step): (doc_id, pos) of every
     * w-token window whose content occurs at a smaller packed
-    * (doc_id, pos). */
+    * (doc_id, pos). The windows, read twice, checkpoint lazily in
+    * the query's first full scan, so building the step runs no job. */
   private[graft] def substringDupHits(docsDf: DataFrame,
                                       w: Int): DataFrame = {
     val packed = packedDocPos("dedup_substrings")
-    val wins = Tables.hot(substringWindows(docsDf, w))
+    val wins = Tables.hotLazy(substringWindows(docsDf, w))
     val canon = wins.groupBy("h1", "h2").agg(min(packed).as("cp"))
     wins.join(canon, Seq("h1", "h2"))
       .filter(packed =!= col("cp"))

@@ -328,14 +328,15 @@ object Graph {
            CAST(sv * 100 AS BIGINT) // n_desc / 100.0 AS subtree_mean
     FROM m ORDER BY id"""
 
-  // ---- co-purchase graph (shared by triangles + pagerank) -------------
+  // ---- co-purchase graph (the structural family's one input) ---------
 
   /** Undirected co-purchase edge list over parts: (a, b) with a < b iff
     * the two parts appear in the same order. The self-join key is the
     * order key, so the pair explode is bounded by lines-per-order² (≤7
     * lines in TPC-H-shaped data); a lake with pathological giant orders
     * would cap lines per order before pairing. Distinct collapses
-    * repeat co-purchases — the graph is unweighted.
+    * repeat co-purchases — the graph is unweighted. The reference the
+    * operators' CSR root (`prCsr`) is checked against (GraphCsrSpec).
     */
   private[graft] def coEdges(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.load(s, dir, "lineitem")
@@ -357,15 +358,13 @@ object Graph {
       FROM lineitem l1 JOIN lineitem l2
         ON l1.l_orderkey = l2.l_orderkey AND l1.l_partkey < l2.l_partkey)"""
 
-  /** SESSION-FROZEN ARTIFACT (the ivfAssign / bm25Stats pattern): the
-    * materialized co-purchase edge list, built ONCE per (session, dir)
-    * and served to every structural query — triangles, pagerank, edge
-    * overlap, k-core, assortativity — exactly like a production graph
-    * store that maintains its edge table instead of re-deriving the
-    * graph from the transaction log per query. */
-  private def coEdgesHot(s: SparkSession, dir: String): DataFrame =
+  /** SESSION-FROZEN ARTIFACT derived from the CSR root (`prCsr`): the
+    * undirected a < b edge list, built only when triangles, k-core,
+    * edge overlap or assortativity first ask for it. */
+  private[graft] def coEdgesHot(s: SparkSession, dir: String): DataFrame =
     graft.Artifacts.frozen(s, ("graph.coEdges", dir)) {
-      graft.Artifacts.pin(Tables.fanout(coEdges(s, dir)))
+      graft.Artifacts.pin(dirEdges(s, dir).filter(col("src") < col("dst"))
+        .select(col("src").as("a"), col("dst").as("b")))
     }
 
   /** Per-vertex triangle counts on the co-purchase graph — the clustering
@@ -382,9 +381,8 @@ object Graph {
     */
   def triangleCounts(s: SparkSession, dir: String): DataFrame = {
     val e = coEdgesHot(s, dir)
-    // frozen degree index (shared with communities/assortativity/kcore
-    // — the undirected per-vertex degree equals the directed out-degree)
-    val (deg, nVerts) = degFrozen(s, dir)
+    // the CSR's degree column (undirected degree ≡ directed out-degree)
+    val (deg, nVerts) = degrees(s, dir)
     // rank = deg·2³² + v: total order by (deg, id); guard both fields
     val rank = expr("""CASE WHEN v >= 0 AND v < 4294967296 AND deg < 2147483648
       THEN deg * 4294967296 + v
@@ -519,17 +517,26 @@ object Graph {
       .orderBy("part")
   }
 
-  /** SESSION-FROZEN ARTIFACT: the co-purchase graph as a CSR adjacency
-    * keyed by source — (src, deg = size(nbrs), nbrs array<long>), one
-    * row per vertex — and its vertex count. A production ranking
-    * service stores exactly this and re-ranks against it. Built once
-    * per (session, dir) from the frozen coEdges and shared by both
-    * routes: the broadcast route joins the pinned blocks directly, the
-    * shuffle route reads their bucketed layout (`bucketedAdj`). */
-  private def prCsr(s: SparkSession, dir: String): (DataFrame, Long) =
+  /** SESSION-FROZEN ARTIFACT, the co-purchase graph's one root: a CSR
+    * adjacency (src, deg = size(nbrs), nbrs sorted distinct
+    * array<long>), one row per vertex, and its vertex count. Built in
+    * ONE aggregate from lineitem with the `coEdges` semantics: each
+    * order's part set (the key filter drops the null-key group the
+    * self-join never forms) explodes map-side to its pairs src ≠ dst,
+    * one groupBy(src) folds them. The sort keeps the artifact and its
+    * bucketed layout (`bucketedAdj`) deterministic. `dirEdges`,
+    * `coEdgesHot` and `degrees` derive from it. */
+  private[graft] def prCsr(s: SparkSession, dir: String): (DataFrame, Long) =
     graft.Artifacts.frozen(s, ("graph.prCsr", dir)) {
-      val csr = graft.Artifacts.pin(dirEdges(s, dir)
-        .groupBy(col("src")).agg(collect_list(col("dst")).as("nbrs"))
+      val baskets = Tables.load(s, dir, "lineitem").filter(col("l_orderkey").isNotNull)
+        .groupBy(col("l_orderkey")).agg(collect_set(col("l_partkey")).as("pks"))
+        .filter(size(col("pks")) >= 2)
+      val csr = graft.Artifacts.pin(baskets
+        .select(explode(col("pks")).as("src"), col("pks"))
+        .select(col("src"), explode(col("pks")).as("dst"))
+        .filter(col("src") =!= col("dst"))
+        .groupBy(col("src"))
+        .agg(array_sort(collect_set(col("dst"))).as("nbrs"))
         .select(col("src"), size(col("nbrs")).as("deg"), col("nbrs")))
       (csr, csr.count())
     }
@@ -560,20 +567,16 @@ object Graph {
       graft.Artifacts.table("graft_pr_adj_", csr)(_.bucketBy(buckets, "src"))
     }
 
-  private def dirEdges(s: SparkSession, dir: String): DataFrame = {
-    val e = coEdgesHot(s, dir)
-    e.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
+  /** The directed edges (both orientations), exploded from the CSR. */
+  private[graft] def dirEdges(s: SparkSession, dir: String): DataFrame =
+    prCsr(s, dir)._1.select(col("src"), explode(col("nbrs")).as("dst"))
+
+  /** The CSR's directed-degree table (v, deg) and vertex count. */
+  private[graft] def degrees(s: SparkSession, dir: String): (DataFrame, Long) = {
+    val (csr, nVerts) = prCsr(s, dir)
+    (csr.select(col("src").as("v"), col("deg").cast("long").as("deg")), nVerts)
   }
 
-  /** Frozen directed-degree table + vertex count over the frozen edge
-    * set. */
-  private def degFrozen(s: SparkSession, dir: String): (DataFrame, Long) =
-    graft.Artifacts.frozen(s, ("graph.degFrozen", dir)) {
-      val d = graft.Artifacts.pin(dirEdges(s, dir)
-        .groupBy(col("src").as("v")).agg(count(lit(1)).as("deg")))
-      (d, d.count())
-    }
   val pageRankSql: String = {
     // every CTE here is referenced by each later iteration — all
     // MATERIALIZED or the unrolled plan re-derives the edge list per
@@ -617,8 +620,8 @@ object Graph {
     * gate certifies every intermediate labeling bit-exactly.
     *
     * Scale shape: the size-adaptive state routing over one adjacency
-    * layout per route. Broadcast route: the directed edges straight
-    * from the frozen coEdges, laid out IN-PLAN on the grouping key
+    * layout per route. Broadcast route: the directed edges exploded
+    * from the frozen CSR, laid out IN-PLAN on the grouping key
     * dst (`repartition(dst)`) — the state join is free (build side
     * broadcasts), every round's label aggregate runs exchange-free on
     * the shared layout, and AQE stage reuse serves the one layout
@@ -635,7 +638,7 @@ object Graph {
     * a HashAggregate where a struct max regresses to SortAggregate).
     * Labels are guarded < 2³² loudly; a count is at most a degree. */
   def labelPropagation(s: SparkSession, dir: String): DataFrame = {
-    val (degT, nVerts) = degFrozen(s, dir)
+    val (degT, nVerts) = degrees(s, dir)
     val labGuard = expr("""CASE WHEN v >= 0 AND v < 4294967296 THEN v
       ELSE raise_error(concat('graph_communities: label ',
         CAST(v AS STRING), ' unpackable')) END""")
@@ -701,17 +704,14 @@ object Graph {
     */
   def edgeOverlap(s: SparkSession, dir: String): DataFrame = {
     val e = coEdgesHot(s, dir)
-    val dirE = e.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
-    // size-adaptive (routeState): broadcast under the vertex-state
-    // bound, co-partitioned shuffle join past it
-    val (adjT, nAdj) = Tables.hotCount(dirE.groupBy(col("src").as("v"))
-      .agg(array_sort(collect_list(col("dst"))).as("nbr"))
-      .select(col("v"), expr("""CASE WHEN size(nbr) <= 65536 THEN nbr
+    // the CSR IS the sorted distinct adjacency; size-adaptive: broadcast
+    // under the vertex-state bound, co-partitioned shuffle join past it
+    val (csr, nVerts) = prCsr(s, dir)
+    val adj = routeState("graph_edge_overlap.adj", csr.select(
+      col("src").as("v"), expr("""CASE WHEN deg <= 65536 THEN nbrs
         ELSE raise_error(concat('graph_edge_overlap: degree ',
-          CAST(size(nbr) AS STRING),
-          ' exceeds the adjacency-array bound')) END""").as("nbr")))
-    val adj = routeState("graph_edge_overlap.adj", adjT, nAdj)
+          CAST(deg AS STRING),
+          ' exceeds the adjacency-array bound')) END""").as("nbr")), nVerts)
     val scored = e
       .join(adj.select(col("v").as("a"), col("nbr").as("na")), Seq("a"))
       .join(adj.select(col("v").as("b"), col("nbr").as("nb")), Seq("b"))
@@ -856,13 +856,10 @@ object Graph {
     * folds exact INTEGER power sums, r = one sqrt + one division.
     */
   def assortativity(s: SparkSession, dir: String): DataFrame = {
-    // hot: the edge set feeds BOTH the degree build and the stub join —
-    // without materialization the coEdges self-join runs twice
     val e = coEdgesHot(s, dir)
-    // frozen degree index (shared with communities/triangles/kcore); the
-    // frozen vertex count drives the broadcast-vs-shuffle routing and both
-    // degree joins reuse ONE exchange (identical checkpointed child)
-    val (degT, nv) = degFrozen(s, dir)
+    // the CSR's vertex count routes broadcast vs shuffle; both degree
+    // joins reuse ONE exchange (identical child over the pinned CSR)
+    val (degT, nv) = degrees(s, dir)
     val dk = routeState("graph_assortativity.deg", degT, nv)
     val stubs = e
       .join(dk.withColumnRenamed("v", "a").withColumnRenamed("deg", "da"), "a")
@@ -951,10 +948,8 @@ object Graph {
     // tiny routed probes (R is small after round 1) + vertex-sized
     // aggregates — the 2m-row degree recompute disappears.
     val e = coEdgesHot(s, dir)
-    // round-0 degrees = the session-frozen directed-degree artifact
-    // (shared with communities/triangles; undirected degree ≡ directed
-    // out-degree of the both-direction edge list)
-    val (deg0, nVerts) = degFrozen(s, dir)
+    // round-0 degrees: the CSR's (undirected ≡ directed out-) degrees
+    val (deg0, nVerts) = degrees(s, dir)
     var d = deg0            // (v, deg): live vertices, live-subgraph degrees
     var cnt = nVerts
     var prev = -1L

@@ -581,6 +581,15 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("building the corpus_pipeline_v3 chain runs no Spark job") {
+    // the first build may train session artifacts (the tokenized
+    // corpus); a second build of the lazy chain must run nothing — no
+    // per-step checkpoint of the substring windows
+    SparkEntry.queries("corpus_pipeline_v3")(spark, sfDir)
+    val jobs = jobsDuring(SparkEntry.queries("corpus_pipeline_v3")(spark, sfDir))
+    assert(jobs.isEmpty, s"corpus_pipeline_v3: plan build ran jobs: $jobs")
+  }
+
   test("round-16 additions keep their scale shapes") {
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     import org.apache.spark.sql.execution.aggregate.SortAggregateExec

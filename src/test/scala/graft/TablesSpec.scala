@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.SpecBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -56,22 +53,9 @@ class TablesSpec extends SparkSpec {
     }
   }
 
-  /** Spark jobs started while `body` runs, counted by a listener. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    SpecBus.drain(sc)
-    sc.addSparkListener(l)
-    try { body; SpecBus.drain(sc) } finally sc.removeSparkListener(l)
-    n.get
-  }
-
   test("catalog: a second load of an unchanged table runs no Spark job") {
     Tables.load(spark, sfDir, "lineitem")
-    assert(jobsDuring(Tables.load(spark, sfDir, "lineitem")) == 0)
+    assert(jobsDuring(Tables.load(spark, sfDir, "lineitem")).isEmpty)
   }
 
   test("catalog: every load is a fresh Dataset, so two loads self-join") {
@@ -101,7 +85,7 @@ class TablesSpec extends SparkSpec {
     for (q <- Seq("q1_agg", "q3_join_topn", "q13_custdist",
                   "q14_promo_share", "q_funnel")) {
       SparkEntry.queries(q)(spark, sfDir)
-      assert(jobsDuring(SparkEntry.queries(q)(spark, sfDir)) == 0, q)
+      assert(jobsDuring(SparkEntry.queries(q)(spark, sfDir)).isEmpty, q)
     }
   }
 
